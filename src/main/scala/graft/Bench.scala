@@ -1,34 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** The session the gate certifies (Verify builds the same one): the
+    * library's injected rules, UTC, the codegen cache sized for a
+    * 283-query session, the fork-free local filesystem.
+    */
+  private[graft] def session(cpus: Int): SparkSession = Sessions.local(cpus, cpus)
+
   def main(args: Array[String]): Unit = {
     val wallStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the injected optimizer rules (RewriteArrayDot/Hash60/Cents/
-      // Shingles/SortedTrail) are part of the library — r12 found the
-      // bench session never loaded them, so every composed idiom ran
-      // its interpreted form in BENCH_r≤11 while ScaleSmoke (via
-      // Sessions.local) ran the kernels. Register them here so the
-      // driver artifact measures the library as shipped.
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // keep compute-heavy small shuffles wide — see Sessions.local
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // codegen class cache sized for a 283-query session (r16): the
-      // default 100 entries thrashes across the gate — thread dumps
-      // mid-run showed 31/32 executor threads parked on the codegen
-      // compile KeyLock re-compiling evicted projections, inflating a
-      // contiguous band of queries 3–15× (the r15 "late-alphabet
-      // spikes" mechanism). Static conf, so it must be set at session
-      // build. Size is query-set-diversity-bound, not data-bound —
-      // the same value is right at any SF.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // single-run timings swing ±50% on this harness (measured across
     // rounds) and the driver box is routinely contended by OTHER
     // processes: BENCH_r15's per-query map recorded 8–40× spikes that
@@ -87,13 +69,6 @@ object Bench {
       * query failed — a flaky query must not hide behind its passing
       * reps.
       */
-    // the qNNNdM_* entries are TEMPORARY stage-decomposition
-    // diagnostics for the driver's correctness gate (VERDICT r11
-    // item 2) — instrumentation, not operators: benching them would
-    // shift the headline total against prior rounds and crowd the
-    // compact line's width budget. They still run in Verify (the
-    // gate) and in `sbt test`.
-    val benched = SparkEntry.queries.filterNot(_._1.matches("q\\d+d\\d+[a-z]?_.*"))
 
     // the streaming pairings are micro-batch-machinery-dominated and
     // stable across reps (r13/r14 artifacts: per-query spread well
@@ -144,7 +119,7 @@ object Bench {
     }
 
     def runSf(dir: String, repCap: Int = Int.MaxValue): Seq[QRun] = {
-      val first = benched.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val first = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         runOne(name, fn, dir, repsOf(name).min(repCap))
       }
       // spread-triggered retry (VERDICT r15 item 1c): a ≥3× rep spread
@@ -155,7 +130,7 @@ object Bench {
       if (repCap > 1) first.map { q =>
         if (!q.anyFailed && q.times.nonEmpty && q.times.min >= 0.5 &&
             q.spread > 3.0) {
-          val extra = runOne(q.name, benched(q.name), dir, 1)
+          val extra = runOne(q.name, SparkEntry.queries(q.name), dir, 1)
           QRun(q.name, q.times ++ extra.times, q.loads ++ extra.loads,
             q.anyFailed || extra.anyFailed, retried = true)
         } else q

@@ -4,28 +4,17 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private[graft] def session(cpus: Int): SparkSession = Sessions.local(cpus, cpus)
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: restrict the dump to named queries (local
     // iteration); the driver always passes exactly two args
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // register the injected optimizer rules (r12): the gate then
-      // verifies the REWRITTEN plans against DuckDB — the strongest
-      // proof the rules are value-identical, and the same session
-      // shape Bench measures
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep compute-heavy small shuffles wide — see Sessions.local
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // codegen cache sized for the 283-query gate — see Bench.scala
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the injected optimizer rules are registered (r12): the gate then
+    // verifies the REWRITTEN plans against DuckDB — the strongest proof
+    // the rules are value-identical, and the same session Bench measures
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

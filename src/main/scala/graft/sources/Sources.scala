@@ -1,9 +1,11 @@
 package graft.sources
 
 import scala.sys.process._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Batch sources & sinks mapping the reference's I/O surface
   * (deva/core/sources.py, core.py:1262 to_textfile) onto Spark's
@@ -109,7 +111,9 @@ object Sources {
   * per-batch write cost proportional to the batch (× table/N), the
   * same layout contract a lakehouse MERGE gets from clustering.
   * Bucket count is fixed at creation (persisted in `_graft_buckets`)
-  * so every future batch hashes keys identically.
+  * so every future batch hashes keys identically. The store's schema
+  * (the union over its buckets) is recorded in `_graft_schema`, so a
+  * read names its columns instead of inferring them (see [[read]]).
   */
 class KvStore(spark: SparkSession, path: String, keyCols: Seq[String],
     versionCol: String, numBuckets: Int = 16, bucketCols: Seq[String] = Nil,
@@ -133,6 +137,7 @@ class KvStore(spark: SparkSession, path: String, keyCols: Seq[String],
   private val stagedPath = new org.apache.hadoop.fs.Path(path + ".staged")
   private val manifestPath = new org.apache.hadoop.fs.Path(stagedPath, "_graft_swap")
   private val metaPath = new org.apache.hadoop.fs.Path(rootPath, "_graft_buckets")
+  private val schemaPath = new org.apache.hadoop.fs.Path(rootPath, "_graft_schema")
 
   // rename reports failure via its return value, not an exception —
   // an unchecked false would silently lose the upsert
@@ -294,7 +299,7 @@ class KvStore(spark: SparkSession, path: String, keyCols: Seq[String],
       // file (e.g. a pre-bucketing flat parquet table) would become
       // invisible to current() and permanently masked by upserts
       val strangers = fs.listStatus(rootPath).map(_.getPath.getName).filterNot { n =>
-        n == "_graft_buckets" || n.startsWith("b=")
+        n == "_graft_buckets" || n == "_graft_schema" || n.startsWith("b=")
       }
       if (strangers.nonEmpty)
         throw new IllegalStateException(
@@ -337,6 +342,35 @@ class KvStore(spark: SparkSession, path: String, keyCols: Seq[String],
         !st.getPath.getName.endsWith(".old"))
       .map(_.getPath).toSeq.sortBy(_.getName)
   }
+
+  // Parquet schema inference is a Spark job on every read, with or
+  // without mergeSchema. The store records its schema instead: the
+  // union over every bucket, widened by an upsert BEFORE its commit
+  // point, so the record never names fewer columns than the committed
+  // buckets carry. A store whose meta predates the record, or whose
+  // record a crash tore mid-rewrite, falls back to inference over every
+  // bucket once per handle; its next upsert writes the record.
+  private var inferred: Option[StructType] = None
+
+  private def recordedSchema(): Option[StructType] =
+    try Some(DataType.fromJson(readSmallFile(schemaPath)).asInstanceOf[StructType])
+    catch { case NonFatal(_) => None } // absent, or torn by a crash
+
+  private def storeSchema(recorded: Option[StructType]): Option[StructType] =
+    recorded.orElse {
+      if (inferred.isEmpty) {
+        val dirs = bucketDirs
+        if (dirs.nonEmpty) inferred = Some(KvStore.nullable(
+          spark.read.option("mergeSchema", "true").parquet(dirs.map(_.toString): _*).schema))
+      }
+      inferred
+    }
+
+  /** Read bucket dirs with the store's schema: columns a bucket's files
+    * lack (it predates an evolution) read as null, as mergeSchema did.
+    */
+  private def read(dirs: Seq[org.apache.hadoop.fs.Path]): DataFrame =
+    spark.read.schema(storeSchema(recordedSchema()).get).parquet(dirs.map(_.toString): _*)
 
   /** Upsert a batch: new rows win over stored rows at equal keys by
     * (versionCol, then presence in the incoming batch). Only buckets
@@ -386,20 +420,18 @@ class KvStore(spark: SparkSession, path: String, keyCols: Seq[String],
 
   private def upsertStaged(incoming: DataFrame, evolveSchema: Boolean): Unit = {
     val nb = buckets
-    // bucket ids are bounded by nb (a constant), so this collect is a
-    // ≤ nb-element driver list, not a data-sized one
-    val touched = incoming.select("__b").distinct()
-      .collect().map(_.getInt(0)).sorted
+    val touched = KvStore.bucketSet(incoming.select("__b"))
     refreshLock() // the probe job may have consumed a chunk of the lease
     if (touched.isEmpty) { incoming.unpersist(blocking = true); return }
+    val recorded = recordedSchema()
+    val prior = storeSchema(recorded)
     val existingTouched = touched.map(b => new org.apache.hadoop.fs.Path(rootPath, s"b=$b"))
       .filter(fs.exists)
     val merged = if (existingTouched.nonEmpty) {
       // bucket id re-derived from the keys (same deterministic hash)
-      // rather than parsed from the directory name
-      // mergeSchema: touched buckets may straddle an earlier evolution
-      val cur = spark.read.option("mergeSchema", "true")
-        .parquet(existingTouched.map(_.toString): _*)
+      // rather than parsed from the directory name; the store's schema
+      // covers touched buckets that straddle an earlier evolution
+      val cur = spark.read.schema(prior.get).parquet(existingTouched.map(_.toString): _*)
         .withColumn("__gen", lit(0)).withColumn("__b", bucketOf)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(keyCols.map(col): _*)
@@ -419,6 +451,14 @@ class KvStore(spark: SparkSession, path: String, keyCols: Seq[String],
     fs.mkdirs(rootPath)
     if (!fs.exists(metaPath))
       writeSmallFile(metaPath, s"$nb\n${effBucketCols.mkString(",")}")
+    // widen the record to what was staged, before the commit point: the
+    // staged columns' types win, a column only untouched buckets carry
+    // stays
+    val staged = KvStore.nullable(merged.drop("__b").schema)
+    val before = prior.getOrElse(new StructType())
+    val record = StructType(before.map(f => staged.find(_.name == f.name).getOrElse(f)) ++
+      staged.filterNot(f => before.fieldNames.contains(f.name)))
+    if (!recorded.contains(record)) writeSmallFile(schemaPath, record.json)
     // every staged bucket must exist BEFORE the manifest commits the
     // swap — a missing one here means the write job lied about success
     touched.foreach { b =>
@@ -432,22 +472,20 @@ class KvStore(spark: SparkSession, path: String, keyCols: Seq[String],
     incoming.unpersist(blocking = true)
   }
 
-  // mergeSchema: after an evolveSchema upsert, only the TOUCHED buckets
-  // carry the widened schema on disk — untouched buckets keep the old
-  // one. Merging the footers (bucket-bounded, not corpus-sized) makes
-  // every read see the union schema with nulls for pre-evolution rows.
+  // after an evolveSchema upsert, only the TOUCHED buckets carry the
+  // widened schema on disk — untouched buckets keep the old one. The
+  // store's schema makes every read see the union with nulls for
+  // pre-evolution rows.
   def current(): Option[DataFrame] = {
     val dirs = bucketDirs
-    if (dirs.isEmpty) None
-    else Some(spark.read.option("mergeSchema", "true").parquet(dirs.map(_.toString): _*))
+    if (dirs.isEmpty) None else Some(read(dirs))
   }
 
   /** The bucket ids the given bucket-column values hash into (same
-    * expression the writer uses). Bounded by the bucket count, so the
-    * collect is a ≤ N-element driver list.
+    * expression the writer uses).
     */
   def bucketIdsFor(values: DataFrame): Seq[Int] =
-    values.select(bucketOf.as("__b")).distinct().collect().map(_.getInt(0)).toSeq.sorted
+    KvStore.bucketSet(values.select(bucketOf)).toSeq
 
   /** Point-lookup read path: scan ONLY the buckets the given values
     * hash into — ≤ |distinct values| directories instead of the whole
@@ -458,8 +496,7 @@ class KvStore(spark: SparkSession, path: String, keyCols: Seq[String],
   def lookup(values: DataFrame): Option[DataFrame] = {
     val dirs = bucketIdsFor(values)
       .map(b => new org.apache.hadoop.fs.Path(rootPath, s"b=$b")).filter(fs.exists)
-    if (dirs.isEmpty) None
-    else Some(spark.read.option("mergeSchema", "true").parquet(dirs.map(_.toString): _*))
+    if (dirs.isEmpty) None else Some(read(dirs))
   }
 
   /** The stored table; fails loudly when nothing has been written yet
@@ -468,4 +505,26 @@ class KvStore(spark: SparkSession, path: String, keyCols: Seq[String],
   def get(): DataFrame =
     current().getOrElse(throw new NoSuchElementException(
       s"KvStore at $path is empty — upsert a batch before reading"))
+}
+
+object KvStore {
+  /** The distinct values of a one-int-column frame of bucket ids, sorted,
+    * in one map-only job: each task reduces its rows to a set of at most
+    * N ids (N buckets), merged after `collect()`. `distinct()` would add
+    * a shuffle stage.
+    */
+  private def bucketSet(ids: DataFrame): Array[Int] =
+    ids.rdd.mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
+      .collect().flatten.distinct.sorted
+
+  /** Parquet reads every column as nullable; so does the record. */
+  private def nullable(t: StructType): StructType =
+    StructType(t.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType => nullable(s)
+    case a: ArrayType => ArrayType(nullableType(a.elementType), containsNull = true)
+    case m: MapType => MapType(m.keyType, nullableType(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 }

@@ -276,6 +276,76 @@ class FlowSourcesSpec extends AnyFunSuite {
       || rows.map(r => Option(r.getAs[Any]("score"))).toSeq == Seq(Some(42L), None))
   }
 
+  test("KvStore: after an evolution, a strict upsert omitting the evolved column still fails") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft_kv_evo3").toString + "/t"
+    val store = new KvStore(spark, tmp, Seq("k"), "v", numBuckets = 8)
+    val ids = (0 until 64).map(i => s"k$i" -> store.bucketIdsFor(Seq(s"k$i").toDF("k")).head)
+    val (kA, bA) = ids.head
+    val (kB, bB) = ids.find(_._2 != bA).get
+    val (kB2, _) = ids.find { case (k, b) => b == bB && k != kB }.get // 64 keys, 8 buckets
+    store.upsert(Seq((kA, 1L, "old")).toDF("k", "v", "payload"))
+    store.upsert(Seq((kB, 1L, "new", 42L)).toDF("k", "v", "payload", "score"),
+      evolveSchema = true)
+    // the touched bucket carries `score` on disk: dropping it silently
+    // would lose kB's 42, so strict mode must refuse as before
+    intercept[org.apache.spark.sql.AnalysisException](
+      store.upsert(Seq((kB2, 1L, "strict")).toDF("k", "v", "payload")))
+    val reopened = new KvStore(spark, tmp, Seq("k"), "v", numBuckets = 8)
+    val rows = reopened.get().orderBy("k").collect()
+      .map(r => (r.getAs[String]("k"), Option(r.getAs[Any]("score")))).toSet
+    assert(rows == Set(kA -> None, kB -> Some(42L)))
+  }
+
+  test("KvStore: a store whose meta predates the schema record opens, upserts and reads") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft_kv_legacy").toString + "/t"
+    val store = new KvStore(spark, tmp, Seq("k"), "v", numBuckets = 4)
+    store.upsert((0 until 16).map(i => (s"k$i", 1L, s"p$i")).toDF("k", "v", "payload"))
+    store.upsert(Seq(("k0", 2L, "p0v2", 7L)).toDF("k", "v", "payload", "score"),
+      evolveSchema = true)
+    // the layout an older writer left: a count-only meta, no record
+    val root = java.nio.file.Paths.get(tmp)
+    Seq("_graft_schema", "._graft_schema.crc", "._graft_buckets.crc")
+      .foreach(n => Files.deleteIfExists(root.resolve(n)))
+    Files.writeString(root.resolve("_graft_buckets"), "4")
+    val legacy = new KvStore(spark, tmp, Seq("k"), "v", numBuckets = 4)
+    assert(legacy.get().count() == 16)
+    assert(legacy.get().filter(col("k") === "k0").select("score").as[Long].collect().toSeq == Seq(7L),
+      "inference over every bucket finds the evolved column")
+    legacy.upsert(Seq(("k1", 2L, "p1v2", 8L)).toDF("k", "v", "payload", "score"))
+    assert(Files.exists(root.resolve("_graft_schema")), "the upsert records the schema")
+    val got = new KvStore(spark, tmp, Seq("k"), "v", numBuckets = 4).get()
+    assert(got.count() == 16)
+    assert(got.filter(col("score").isNotNull).orderBy("k").select("k", "score").as[(String, Long)]
+      .collect().toSeq == Seq(("k0", 7L), ("k1", 8L)))
+  }
+
+  test("KvStore: an upsert into stored buckets runs a map-only probe and the staged write") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft_kv_jobs").toString + "/t"
+    val store = new KvStore(spark, tmp, Seq("k"), "v", numBuckets = 4)
+    store.upsert((0 until 16).map(i => (s"k$i", 1L, s"p$i")).toDF("k", "v", "payload"))
+    val sc = spark.sparkContext
+    sc.setJobGroup("kv_jobs", "one upsert")
+    try store.upsert((0 until 16).map(i => (s"k$i", 2L, s"q$i")).toDF("k", "v", "payload"))
+    finally sc.clearJobGroup()
+    // job starts reach the status tracker through the listener bus, in
+    // order: once a later job shows, every upsert job has
+    sc.setJobGroup("kv_jobs_end", "marker")
+    try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30e9.toLong
+    while (sc.statusTracker.getJobIdsForGroup("kv_jobs_end").isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    val stagesPerJob = sc.statusTracker.getJobIdsForGroup("kv_jobs").sorted.toSeq
+      .map(id => sc.statusTracker.getJobInfo(id).get.stageIds.length)
+    // the bucket probe (one map-only stage, no distinct shuffle), then
+    // the staged write, which adaptive execution runs as its window's
+    // shuffle-map job and the write job; no schema inference job
+    assert(stagesPerJob == Seq(1, 1, 2), s"stages per job: $stagesPerJob")
+    assert(store.get().filter(col("v") === 2L).count() == 16)
+  }
+
   test("KvStore: a live second writer fails LOUDLY; a stale (crashed) lock is broken") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft_kv_lock").toString + "/t"
