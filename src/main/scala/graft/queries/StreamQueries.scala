@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.streaming.{EventFlow, Stateful}
+import graft.streaming.Pairing.{micros, withStreamShuffle}
 import graft.functions.Determinism._
 
 /** Queries that run REAL Structured Streaming jobs inside the gate
@@ -22,13 +23,6 @@ object StreamQueries {
   private val runId = new AtomicInteger(0)
   // per-invocation q243 scratch isolation (ADVICE r13)
   private val q243Run = new AtomicInteger(0)
-
-  /** See [[graft.streaming.Pairing.withStreamShuffle]] — the shared
-    * stream-shuffle-width discipline, factored into the pairing
-    * harness in round 10.
-    */
-  private def withStreamShuffle[T](spark: SparkSession)(body: => T): T =
-    graft.streaming.Pairing.withStreamShuffle(spark)(body)
 
   /** The events row type, shared with the pairing harness. */
   type EvRow = graft.streaming.Pairing.EvRow
@@ -91,19 +85,12 @@ object StreamQueries {
     import sp.implicits._
     val name = s"q62_mem_${runId.incrementAndGet()}"
     withStreamShuffle(spark) {
-      val ds = EventFlow.fromEvents(spark, dir).df.as[EvRow]
       val folded = Stateful.foldPerKey[Long, EvRow, (Long, Long), (Long, Long, Long)](
-        ds)(_.user_id)((0L, 0L))(
+        graft.streaming.Pairing.events(spark, dir))(_.user_id)((0L, 0L))(
         (s, e) => (s._1 + math.floor(e.value * 100 + 0.5).toLong, s._2 + 1))(
         (k, s) => (k, s._1, s._2))
-      val q = folded.toDF("user_id", "total_cents", "n")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    EventFlow.drainMemorySink(spark, name).orderBy(col("user_id"))
+      EventFlow(folded.toDF("user_id", "total_cents", "n")).toMemory(spark, name, "append")
+    }.orderBy(col("user_id"))
   }
 
   val q62_stream_accumulate_sql: String =
@@ -376,37 +363,21 @@ object StreamQueries {
   def q110_stream_anomaly(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val name = s"q110_mem_${runId.incrementAndGet()}"
-    withStreamShuffle(spark) {
-      val ds = EventFlow.fromEvents(spark, dir).df.as[EvRow]
-      val flagged = ds.groupByKey(_.user_id)
-        .flatMapGroupsWithState[List[Long], (Long, Long, Double, Double, Boolean)](
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (k: Long, it: Iterator[EvRow], state: org.apache.spark.sql.streaming.GroupState[List[Long]]) =>
-            var window = state.getOption.getOrElse(List.empty[Long])
-            val outs = it.toVector
-              .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-              .flatMap { e =>
-                val res = if (window.length == 5) {
-                  val mean = window.sum.toDouble / 100.0 / 5.0
-                  Some((e.event_id, k, e.value, mean,
-                    math.abs(e.value - mean) > 130.0))
-                } else None
-                window = (window :+ graft.functions.Determinism.centsOfDouble(e.value)).takeRight(5)
-                res
-              }
-            state.update(window)
-            outs.iterator
+    graft.streaming.Pairing.run[Long, List[Long], (Long, Long, Double, Double, Boolean)](
+      spark, dir, Seq("event_id", "user_id", "value", "roll_mean", "is_anomaly"))(
+      _.user_id)(List.empty[Long]) { (k, window0, ordered) =>
+        var window = window0
+        val outs = ordered.flatMap { e =>
+          val res = if (window.length == 5) {
+            val mean = window.sum.toDouble / 100.0 / 5.0
+            Some((e.event_id, k, e.value, mean,
+              math.abs(e.value - mean) > 130.0))
+          } else None
+          window = (window :+ graft.functions.Determinism.centsOfDouble(e.value)).takeRight(5)
+          res
         }
-      val q = flagged.toDF("event_id", "user_id", "value", "roll_mean", "is_anomaly")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    EventFlow.drainMemorySink(spark, name).orderBy(col("event_id"))
+        (window, outs)
+      } (_.orderBy(col("event_id")))
   }
 
   /** Same oracle as the batch detector — the point of the query. */
@@ -509,41 +480,25 @@ object StreamQueries {
   def q130_stream_ewma(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val name = s"q130_mem_${runId.incrementAndGet()}"
     val weights = EventQueries.ewmaWeights
-    withStreamShuffle(spark) {
-      val ds = EventFlow.fromEvents(spark, dir).df.as[EvRow]
-      val smoothed = ds.groupByKey(_.user_id)
-        .flatMapGroupsWithState[List[Long], (Long, Long, Timestamp, Double)](
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (k: Long, it: Iterator[EvRow], state: org.apache.spark.sql.streaming.GroupState[List[Long]]) =>
-            var window = state.getOption.getOrElse(List.empty[Long])
-            val outs = it.toVector
-              .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-              .map { e =>
-                window = (window :+ graft.functions.Determinism.centsOfDouble(e.value)).takeRight(10)
-                val len = window.length
-                var num = 0L; var den = 0L
-                var i = 0
-                while (i < len) {
-                  val w = weights(len - 1 - i) // recency of position i
-                  num += window(i) * w; den += w
-                  i += 1
-                }
-                (k, e.event_id, e.ts, num.toDouble / (den * 100).toDouble)
-              }
-            state.update(window)
-            outs.iterator
+    graft.streaming.Pairing.run[Long, List[Long], (Long, Long, Timestamp, Double)](
+      spark, dir, Seq("user_id", "event_id", "ts", "ewma"))(
+      _.user_id)(List.empty[Long]) { (k, window0, ordered) =>
+        var window = window0
+        val outs = ordered.map { e =>
+          window = (window :+ graft.functions.Determinism.centsOfDouble(e.value)).takeRight(10)
+          val len = window.length
+          var num = 0L; var den = 0L
+          var i = 0
+          while (i < len) {
+            val w = weights(len - 1 - i) // recency of position i
+            num += window(i) * w; den += w
+            i += 1
+          }
+          (k, e.event_id, e.ts, num.toDouble / (den * 100).toDouble)
         }
-      val q = smoothed.toDF("user_id", "event_id", "ts", "ewma")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    EventFlow.drainMemorySink(spark, name).orderBy(col("user_id"), col("ts"), col("event_id"))
+        (window, outs)
+      } (_.orderBy(col("user_id"), col("ts"), col("event_id")))
   }
 
   /** Same oracle as the batch smoother — the point of the query. */
@@ -637,55 +592,40 @@ object StreamQueries {
   def q157_stream_holt(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val name = s"q157_mem_${runId.incrementAndGet()}"
-    withStreamShuffle(spark) {
-      val ds = EventFlow.fromEvents(spark, dir).df.as[EvRow]
-      val holt = ds.groupByKey(_.event_type)
-        .flatMapGroupsWithState[Vector[(Long, Long)], (String, Long, Double, Double, Double)](
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (k: String, it: Iterator[EvRow],
-           state: org.apache.spark.sql.streaming.GroupState[Vector[(Long, Long)]]) =>
-            val m = scala.collection.mutable.HashMap.empty[Long, Long]
-            state.getOption.getOrElse(Vector.empty).foreach { case (d, c) => m(d) = c }
-            it.foreach { e =>
-              val d = Math.floorDiv(e.ts.getTime, 86400000L)
-              m(d) = m.getOrElse(d, 0L) + 1L
-            }
-            val sorted = m.toVector.sortBy(_._1)
-            state.update(sorted)
-            if (sorted.size < 2) Iterator.empty
-            else {
-              // identical IEEE op sequence to q156's array fold
-              val xs = sorted.map(_._2.toDouble)
-              var l = xs(0)
-              var b = xs(1) - xs(0)
-              var t = 1
-              while (t < xs.length) {
-                val lNew = 0.5 * xs(t) + 0.5 * (l + b)
-                b = 0.25 * ((0.5 * xs(t) + 0.5 * (l + b)) - l) + 0.75 * b
-                l = lNew
-                t += 1
-              }
-              Iterator.single((k, xs.length.toLong, l, b, l + 7.0 * b))
-            }
+    graft.streaming.Pairing.run[String, Vector[(Long, Long)], (String, Long, Double, Double, Double)](
+      spark, dir, Seq("event_type", "n_days", "level", "trend", "forecast_7"))(
+      _.event_type)(Vector.empty[(Long, Long)]) { (k, days, batch) =>
+        val m = scala.collection.mutable.HashMap.empty[Long, Long]
+        days.foreach { case (d, c) => m(d) = c }
+        batch.foreach { e =>
+          val d = Math.floorDiv(e.ts.getTime, 86400000L)
+          m(d) = m.getOrElse(d, 0L) + 1L
         }
-      val q = holt.toDF("event_type", "n_days", "level", "trend", "forecast_7")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // one emission per key per batch; n_days only grows, so the
-    // max-struct picks each key's final state (the q121 idiom)
-    EventFlow.drainMemorySink(spark, name)
-      .groupBy(col("event_type"))
-      .agg(max(struct(col("n_days"), col("level"), col("trend"), col("forecast_7"))).as("s"))
-      .select(col("event_type"), col("s.n_days").as("n_days"),
-        col("s.level").as("level"), col("s.trend").as("trend"),
-        col("s.forecast_7").as("forecast_7"))
-      .orderBy(col("event_type"))
+        val sorted = m.toVector.sortBy(_._1)
+        if (sorted.size < 2) (sorted, Vector.empty)
+        else {
+          // identical IEEE op sequence to q156's array fold
+          val xs = sorted.map(_._2.toDouble)
+          var l = xs(0)
+          var b = xs(1) - xs(0)
+          var t = 1
+          while (t < xs.length) {
+            val lNew = 0.5 * xs(t) + 0.5 * (l + b)
+            b = 0.25 * ((0.5 * xs(t) + 0.5 * (l + b)) - l) + 0.75 * b
+            l = lNew
+            t += 1
+          }
+          (sorted, Vector((k, xs.length.toLong, l, b, l + 7.0 * b)))
+        }
+      } (
+        // one emission per key per batch; n_days only grows, so the
+        // max-struct picks each key's final state (the q121 idiom)
+        _.groupBy(col("event_type"))
+          .agg(max(struct(col("n_days"), col("level"), col("trend"), col("forecast_7"))).as("s"))
+          .select(col("event_type"), col("s.n_days").as("n_days"),
+            col("s.level").as("level"), col("s.trend").as("trend"),
+            col("s.forecast_7").as("forecast_7"))
+          .orderBy(col("event_type")))
   }
 
   /** Same oracle as the batch Holt — the point of the query. */
@@ -705,54 +645,37 @@ object StreamQueries {
   def q165_stream_funnel(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val name = s"q165_mem_${runId.incrementAndGet()}"
-    def micros(t: Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
-    withStreamShuffle(spark) {
-      val ds = EventFlow.fromEvents(spark, dir).df.as[EvRow]
-      val staged = ds.groupByKey(_.user_id)
-        .flatMapGroupsWithState[(Long, Long, Long), (Long, Option[Long], Option[Long], Option[Long], Long)](
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (k: Long, it: Iterator[EvRow],
-           state: org.apache.spark.sql.streaming.GroupState[(Long, Long, Long)]) =>
-            var (fv, fc, fp) = state.getOption.getOrElse((-1L, -1L, -1L))
-            it.toVector
-              .map(e => (micros(e.ts), e.event_type))
-              .sortBy(_._1)
-              .groupBy(_._1).toVector.sortBy(_._1)
-              .foreach { case (us, group) =>
-                // stage order within an instant mirrors the batch >=
-                if (fv < 0 && group.exists(_._2 == "view")) fv = us
-                if (fv >= 0 && fc < 0 && group.exists(_._2 == "click") && us >= fv) fc = us
-                if (fc >= 0 && fp < 0 && group.exists(_._2 == "purchase") && us >= fc) fp = us
-              }
-            state.update((fv, fc, fp))
-            val stage = if (fp >= 0) 3L else if (fc >= 0) 2L else if (fv >= 0) 1L else 0L
-            Iterator.single((k,
-              if (fv >= 0) Some(fv) else None,
-              if (fc >= 0) Some(fc) else None,
-              if (fp >= 0) Some(fp) else None, stage))
-        }
-      val q = staged.toDF("user_id", "fv", "fc", "fp", "stage")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // one emission per user per batch; fields are set-once and stage
-    // only grows, so min-ignoring-nulls + max(stage) pick the finals
-    EventFlow.drainMemorySink(spark, name)
-      .groupBy(col("user_id"))
-      .agg(min(col("fv")).as("fv"), min(col("fc")).as("fc"),
-        min(col("fp")).as("fp"), max(col("stage")).as("stage"))
-      .select(col("user_id"),
-        timestamp_micros(col("fv")).as("first_view"),
-        timestamp_micros(col("fc")).as("first_click"),
-        timestamp_micros(col("fp")).as("first_purchase"),
-        col("stage"))
-      .orderBy(col("user_id"))
+    graft.streaming.Pairing.run[Long, (Long, Long, Long),
+        (Long, Option[Long], Option[Long], Option[Long], Long)](
+      spark, dir, Seq("user_id", "fv", "fc", "fp", "stage"))(
+      _.user_id)((-1L, -1L, -1L)) { (k, s0, ordered) =>
+        var (fv, fc, fp) = s0
+        ordered
+          .map(e => (micros(e.ts), e.event_type))
+          .groupBy(_._1).toVector.sortBy(_._1)
+          .foreach { case (us, group) =>
+            // stage order within an instant mirrors the batch >=
+            if (fv < 0 && group.exists(_._2 == "view")) fv = us
+            if (fv >= 0 && fc < 0 && group.exists(_._2 == "click") && us >= fv) fc = us
+            if (fc >= 0 && fp < 0 && group.exists(_._2 == "purchase") && us >= fc) fp = us
+          }
+        val stage = if (fp >= 0) 3L else if (fc >= 0) 2L else if (fv >= 0) 1L else 0L
+        ((fv, fc, fp), Vector((k,
+          if (fv >= 0) Some(fv) else None,
+          if (fc >= 0) Some(fc) else None,
+          if (fp >= 0) Some(fp) else None, stage)))
+      } (
+        // one emission per user per batch; fields are set-once and stage
+        // only grows, so min-ignoring-nulls + max(stage) pick the finals
+        _.groupBy(col("user_id"))
+          .agg(min(col("fv")).as("fv"), min(col("fc")).as("fc"),
+            min(col("fp")).as("fp"), max(col("stage")).as("stage"))
+          .select(col("user_id"),
+            timestamp_micros(col("fv")).as("first_view"),
+            timestamp_micros(col("fc")).as("first_click"),
+            timestamp_micros(col("fp")).as("first_purchase"),
+            col("stage"))
+          .orderBy(col("user_id")))
   }
 
   /** Same oracle as the batch funnel — the point of the query. */
@@ -850,41 +773,21 @@ object StreamQueries {
   def q171_stream_interarrival(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val name = s"q171_mem_${runId.incrementAndGet()}"
-    def micros(t: Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
-    withStreamShuffle(spark) {
-      val ds = EventFlow.fromEvents(spark, dir).df.as[EvRow]
-      val gaps = ds.groupByKey(_.user_id)
-        .flatMapGroupsWithState[(Long, Long), (String, Long)](
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (_: Long, it: Iterator[EvRow],
-           state: org.apache.spark.sql.streaming.GroupState[(Long, Long)]) =>
-            var last = state.getOption.getOrElse((Long.MinValue, Long.MinValue))
-            val out = Vector.newBuilder[(String, Long)]
-            it.toVector
-              .map(e => (micros(e.ts), e.event_id, e.event_type))
-              .sortBy(t => (t._1, t._2))
-              .foreach { case (us, eid, tpe) =>
-                if (last._1 != Long.MinValue) out += ((tpe, us - last._1))
-                last = (us, eid)
-              }
-            state.update(last)
-            out.result().iterator
+    graft.streaming.Pairing.run[Long, (Long, Long), (String, Long)](
+      spark, dir, Seq("event_type", "gap_us"))(
+      _.user_id)((Long.MinValue, Long.MinValue)) { (_, last0, ordered) =>
+        var last = last0
+        val out = Vector.newBuilder[(String, Long)]
+        ordered.foreach { e =>
+          val us = micros(e.ts)
+          if (last._1 != Long.MinValue) out += ((e.event_type, us - last._1))
+          last = (us, e.event_id)
         }
-      val q = gaps.toDF("event_type", "gap_us")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    EventFlow.drainMemorySink(spark, name)
-      .withColumn("bucket", length(bin(col("gap_us"))).cast("long"))
-      .groupBy(col("event_type"), col("bucket"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("event_type"), col("bucket"))
+        (last, out.result())
+      } (_.withColumn("bucket", length(bin(col("gap_us"))).cast("long"))
+          .groupBy(col("event_type"), col("bucket"))
+          .agg(count(lit(1)).as("n"))
+          .orderBy(col("event_type"), col("bucket")))
   }
 
   /** Same oracle as the batch inter-arrival histogram — the point. */
@@ -902,53 +805,36 @@ object StreamQueries {
   def q172_stream_transitions(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val name = s"q172_mem_${runId.incrementAndGet()}"
-    def micros(t: Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
-    withStreamShuffle(spark) {
-      val ds = EventFlow.fromEvents(spark, dir).df.as[EvRow]
-      val trans = ds.groupByKey(_.user_id)
-        .flatMapGroupsWithState[(Long, Long, String), (String, String)](
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (_: Long, it: Iterator[EvRow],
-           state: org.apache.spark.sql.streaming.GroupState[(Long, Long, String)]) =>
-            var last = state.getOption.getOrElse((Long.MinValue, Long.MinValue, ""))
-            val out = Vector.newBuilder[(String, String)]
-            it.toVector
-              .map(e => (micros(e.ts), e.event_id, e.event_type))
-              .sortBy(t => (t._1, t._2))
-              .foreach { case (us, eid, tpe) =>
-                if (last._1 != Long.MinValue) out += ((last._3, tpe))
-                last = (us, eid, tpe)
-              }
-            state.update(last)
-            out.result().iterator
+    val view = s"q172_pairs_${runId.incrementAndGet()}"
+    graft.streaming.Pairing.run[Long, (Long, Long, String), (String, String)](
+      spark, dir, Seq("event_type", "next_type"))(
+      _.user_id)((Long.MinValue, Long.MinValue, "")) { (_, last0, ordered) =>
+        var last = last0
+        val out = Vector.newBuilder[(String, String)]
+        ordered.foreach { e =>
+          if (last._1 != Long.MinValue) out += ((last._3, e.event_type))
+          last = (micros(e.ts), e.event_id, e.event_type)
         }
-      val q = trans.toDF("event_type", "next_type")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // counts and totals both derive from the one emitted-pairs view —
-    // the q103 memory-sink-view pitfall — so the projection runs as
-    // Spark SQL over a temp view, mirroring the oracle; spark.sql
-    // analyzes eagerly, so the helper view can be dropped right after
-    // (it would otherwise pin the drained frame like the sink did)
-    EventFlow.drainMemorySink(spark, name).createOrReplaceTempView(s"${name}_t")
-    val out = spark.sql(
-      s"""WITH tr AS (
-         |  SELECT event_type, next_type, COUNT(*) AS c
-         |  FROM ${name}_t GROUP BY event_type, next_type),
-         |tot AS (SELECT event_type, SUM(c) AS n FROM tr GROUP BY event_type)
-         |SELECT tr.event_type, tr.next_type, tr.c,
-         |  CAST(tr.c AS DOUBLE) / CAST(t.n AS DOUBLE) AS p
-         |FROM tr JOIN tot t ON tr.event_type = t.event_type
-         |ORDER BY tr.event_type, tr.next_type""".stripMargin)
-    spark.catalog.dropTempView(s"${name}_t")
-    out
+        (last, out.result())
+      } { pairs =>
+        // counts and totals both derive from the one emitted-pairs
+        // frame — the q103 memory-sink-view pitfall — so the projection
+        // runs as Spark SQL over a temp view, mirroring the oracle;
+        // spark.sql analyzes eagerly, so the helper view can be dropped
+        // right after (it would otherwise pin the drained frame)
+        pairs.createOrReplaceTempView(view)
+        val out = spark.sql(
+          s"""WITH tr AS (
+             |  SELECT event_type, next_type, COUNT(*) AS c
+             |  FROM $view GROUP BY event_type, next_type),
+             |tot AS (SELECT event_type, SUM(c) AS n FROM tr GROUP BY event_type)
+             |SELECT tr.event_type, tr.next_type, tr.c,
+             |  CAST(tr.c AS DOUBLE) / CAST(t.n AS DOUBLE) AS p
+             |FROM tr JOIN tot t ON tr.event_type = t.event_type
+             |ORDER BY tr.event_type, tr.next_type""".stripMargin)
+        spark.catalog.dropTempView(view)
+        out
+      }
   }
 
   /** Same oracle as the batch transition matrix — the point. */
@@ -970,47 +856,26 @@ object StreamQueries {
   def q178_stream_multitouch(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val name = s"q178_mem_${runId.incrementAndGet()}"
-    def micros(t: Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
-    withStreamShuffle(spark) {
-      val ds = EventFlow.fromEvents(spark, dir).df.as[EvRow]
-      val em = ds.groupByKey(_.user_id)
-        .flatMapGroupsWithState[Map[String, Long], (String, Long, Long)](
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (_: Long, it: Iterator[EvRow],
-           state: org.apache.spark.sql.streaming.GroupState[Map[String, Long]]) =>
-            var acc = state.getOption.getOrElse(Map.empty[String, Long])
-            val out = Vector.newBuilder[(String, Long, Long)]
-            it.toVector
-              .map(e => (micros(e.ts), e.event_id, e.event_type))
-              .sortBy(t => (t._1, t._2))
-              .foreach { case (_, _, tpe) =>
-                if (tpe == "purchase") {
-                  val k = acc.valuesIterator.sum
-                  if (k > 0) acc.foreach { case (ch, m) => out += ((ch, m, k)) }
-                  acc = Map.empty
-                } else acc = acc.updated(tpe, acc.getOrElse(tpe, 0L) + 1L)
-              }
-            state.update(acc)
-            out.result().iterator
+    graft.streaming.Pairing.run[Long, Map[String, Long], (String, Long, Long)](
+      spark, dir, Seq("channel", "m", "k"))(
+      _.user_id)(Map.empty[String, Long]) { (_, acc0, ordered) =>
+        var acc = acc0
+        val out = Vector.newBuilder[(String, Long, Long)]
+        ordered.foreach { e =>
+          if (e.event_type == "purchase") {
+            val k = acc.valuesIterator.sum
+            if (k > 0) acc.foreach { case (ch, m) => out += ((ch, m, k)) }
+            acc = Map.empty
+          } else acc = acc.updated(e.event_type, acc.getOrElse(e.event_type, 0L) + 1L)
         }
-      val q = em.toDF("channel", "m", "k")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    EventFlow.drainMemorySink(spark, name)
-      .select(col("channel"), col("m"),
-        // decq mirrors q175's floor-int64 credit quantization — the
-        // parity property depends on the identical edge
-        (decq(lit(1.0) / col("k").cast("double"), 6) * col("m")).as("cr"))
-      .groupBy(col("channel"))
-      .agg(sum(col("m")).as("n_touches"), sum(col("cr")).cast("double").as("credit"))
-      .orderBy(col("channel"))
+        (acc, out.result())
+      } (_.select(col("channel"), col("m"),
+            // decq mirrors q175's floor-int64 credit quantization — the
+            // parity property depends on the identical edge
+            (decq(lit(1.0) / col("k").cast("double"), 6) * col("m")).as("cr"))
+          .groupBy(col("channel"))
+          .agg(sum(col("m")).as("n_touches"), sum(col("cr")).cast("double").as("credit"))
+          .orderBy(col("channel")))
   }
 
   /** Same oracle as the batch multi-touch — the point. */
@@ -1079,9 +944,10 @@ object StreamQueries {
   def q184_stream_streaks(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    graft.streaming.Pairing.run[Long, (Long, Long, Long, Long, Long, Long), (Long, Long, Long, Long)](
-      spark, dir, Seq("user_id", "seq", "best_len", "best_start_day"),
-      where = Some(col("event_type") === "purchase"))(
+    graft.streaming.Pairing.runStream[EvRow, Long, (Long, Long, Long, Long, Long, Long),
+        (Long, Long, Long, Long)](
+      spark, graft.streaming.Pairing.events(spark, dir).filter(col("event_type") === "purchase"),
+      Seq("user_id", "seq", "best_len", "best_start_day"), graft.streaming.Pairing.eventOrder)(
       _.user_id)((Long.MinValue, 0L, 0L, 0L, 0L, 0L)) { (u, s0, ordered) =>
         var (lastDay, curStart, curLen, bestStart, bestLen, seen) = s0
         ordered.foreach { e =>
@@ -2281,7 +2147,7 @@ object StreamQueries {
       // live context (e.g. Bench's main-SF → aux-sf0.01 transition)
       // the old eagerly-checkpointed frames would otherwise pin
       // executor storage until the ContextCleaner got around to them
-      // — the same heap-accumulation class drainMemorySink targets.
+      // — the same heap-accumulation class toMemory's release targets.
       if (sigMemo != null && (sigMemo._1 eq sc) && !sc.isStopped)
         sigMemo._4.foreach(releaseCheckpoint)
       val (sig, ckpts) = buildSigFrame(spark, dir, tag)
@@ -2303,8 +2169,8 @@ object StreamQueries {
     val TA = graft.operators.TextAnalysis
     val n1 = s"${tag}i_mem_${runId.incrementAndGet()}"
     val n2 = s"${tag}h_mem_${runId.incrementAndGet()}"
-    // no extra localCheckpoint here: toMemory already returns
-    // drainMemorySink's eagerly-checkpointed LogicalRDD — a second
+    // no extra localCheckpoint here: toMemory already returns its
+    // eagerly-checkpointed LogicalRDD — a second
     // checkpoint would double the pinned copy AND hide the inner one
     // from releaseCheckpoint (the memo release would then free only
     // the outer copy while the corpus-sized inner blocks lingered

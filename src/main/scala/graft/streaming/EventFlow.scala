@@ -83,15 +83,18 @@ final case class EventFlow(df: DataFrame) {
   // ---- sinks -------------------------------------------------------
 
   /** Memory-sink drain: run to completion, then return the sink's
-    * rows as an EAGER local checkpoint and RELEASE the sink itself —
-    * drop the temp view and clear the terminated-query registry, the
-    * two strong references that otherwise pin every sink's rows on
-    * the heap for the life of the process. Found in the r15 bench:
+    * rows as an EAGER local checkpoint and RELEASE the sink itself by
+    * dropping its temp view — the reference that otherwise pins every
+    * sink's rows on the heap for the life of the process (terminated
+    * queries themselves are already unregistered by Spark's
+    * unregisterTerminatedStream — ADVICE r15). Found in the r15 bench:
     * 283 queries × reps of never-dropped sinks (some order- or
     * edge-sized) accumulate into GC pressure that inflates the
     * late-alphabet pairings 3–6× in-process while their isolated
-    * medians sit at their floors. Callers get a frame whose plan is a
-    * LogicalRDD — independent of the view name, safe to use lazily.
+    * medians sit at their floors. The one place graft starts a memory
+    * sink (Pairing.runStream included). Callers get a frame whose plan
+    * is a LogicalRDD — independent of the view name, safe to use
+    * lazily.
     */
   def toMemory(spark: SparkSession, name: String, outputMode: String): DataFrame = {
     val q = df.writeStream
@@ -100,7 +103,9 @@ final case class EventFlow(df: DataFrame) {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    EventFlow.drainMemorySink(spark, name)
+    val out = spark.table(name).localCheckpoint(true)
+    spark.catalog.dropTempView(name)
+    out
   }
 
   /** Streaming parquet sink (deva to_textfile/Sink analogue). */
@@ -130,69 +135,23 @@ final case class EventFlow(df: DataFrame) {
 
 object EventFlow {
 
-  /** Read a completed memory sink once and RELEASE it: eager local
-    * checkpoint of its rows, then drop the temp view — the reference
-    * that otherwise pins the sink (and everything it emitted) on the
-    * heap for the process lifetime (terminated queries themselves are
-    * already unregistered by Spark's unregisterTerminatedStream; the
-    * view drop + checkpoint do the actual release — ADVICE r15).
-    * Shared by [[EventFlow.toMemory]], Pairing.run/runStream, and the
-    * queries that start their memory sinks directly. The returned
-    * frame's plan is a LogicalRDD — independent of the view name,
-    * safe to use lazily after the drop.
-    */
-  def drainMemorySink(spark: SparkSession, name: String): DataFrame = {
-    val out = spark.table(name).localCheckpoint(true)
-    spark.catalog.dropTempView(name)
-    out
-  }
-
   /** File-source flow over a parquet path (deva from_textfile's
     * tail-a-growing-source analogue; new files become new events).
     */
   def fromParquet(spark: SparkSession, path: String, schema: StructType): EventFlow =
     EventFlow(spark.readStream.schema(schema).parquet(path))
 
-  private val eventsSchemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Boolean, org.apache.spark.sql.types.StructType)]()
-
-  /** The test-data events table as a stream, nanos handled as in
-    * [[graft.Tables.events]].
+  /** The test-data events table as a stream, ts normalized as in
+    * [[graft.Tables.events]], opened through [[Pairing.tableStream]].
+    * The gate corpus's events.parquet stores nanos-as-long ts, derived
+    * copies store real timestamps — nanosAsLong is set before the
+    * opener's first (probing) read, so its memoized schema matches
+    * per-call inference.
     */
   def fromEvents(spark: SparkSession, dir: String): EventFlow = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the driver's testdata ships events.parquet as a single FILE;
-    // Spark-written copies (scale smoke, production) are a DIRECTORY
-    // of part files. pathGlobFilter matches leaf file names only, so
-    // pick the read shape by what's actually on disk.
-    // (isDir, schema) memoized per dir — r16: the footer probe +
-    // layout stat is immutable path metadata re-read by every events
-    // pairing in a gate pass (~0.1 s each, StreamProf). Metadata
-    // only, same doctrine as Tables.schemaMemo. Three layouts: single
-    // file (driver testdata), directory of part files (Spark-written
-    // copies), or no literal child at all (date-partitioned trees —
-    // the glob-filter branch handles that one, as before). The
-    // driver's events.parquet stores nanos-as-long ts, derived copies
-    // store real timestamps — nanosAsLong is set before the first
-    // (probing) read, so the memoized schema matches per-call
-    // inference.
-    val (isDir, schema) = eventsSchemaMemo.computeIfAbsent(dir, { _ =>
-      val evPath = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-      val fs = evPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val d = fs.exists(evPath) && fs.getFileStatus(evPath).isDirectory
-      val s =
-        if (d) spark.read.parquet(evPath.toString).schema
-        else spark.read.option("pathGlobFilter", "events.parquet").parquet(dir).schema
-      (d, s)
-    })
-    // file stream sources need a directory: a dir-shaped table IS one;
-    // the single-file form scopes the parent dir by glob filter
-    val st =
-      if (isDir) spark.readStream.schema(schema).parquet(s"$dir/events.parquet")
-      else spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-    EventFlow(schema("ts").dataType match {
+    val st = Pairing.tableStream(spark, dir, "events")
+    EventFlow(st.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         st.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case org.apache.spark.sql.types.TimestampNTZType =>

@@ -4,22 +4,24 @@ import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** The batch≡stream pairing harness (VERDICT r9 stretch 7): the
-  * thirteen q1xx streaming gate queries shared ~25 lines each of
-  * identical machinery — unique memory-sink name, small stream
-  * shuffle width, events→Dataset decode, groupByKey +
-  * flatMapGroupsWithState with the canonical (ts, nanos, event_id)
-  * replay order, AvailableNow trigger, sink projection. `run`
-  * factors that once, so a new pairing is just its key, state type,
-  * fold step, and final projection — plus the batch twin's SQL as
-  * its verbatim oracle (q184 landed as a ~30-line client).
+/** The batch≡stream pairing harness: the one place graft builds a
+  * keyed-state streaming pairing. [[runStream]] holds the machinery —
+  * a small stream shuffle width, groupByKey + flatMapGroupsWithState
+  * with a canonical per-key replay order, optional event-time state
+  * expiry, and an AvailableNow append memory sink drained through
+  * [[EventFlow.toMemory]]. [[run]] (events) and [[runDocs]]
+  * (documents) are thin source adapters: each opens its table as a
+  * typed stream, names its replay order, and delegates. A pairing is
+  * then just its key, state type, fold step and final projection —
+  * plus the batch twin's SQL as its verbatim oracle.
   *
   * Contract notes:
-  *  - `step` sees each micro-batch's rows for one key in
-  *    (ts.getTime, ts.getNanos, event_id) order — batch boundaries
-  *    cannot reorder a key's history (the q143 discipline).
+  *  - `step` sees each micro-batch's rows for one key in the
+  *    source's replay order — for events (micros(ts), event_id) —
+  *    so batch boundaries cannot reorder a key's history (the q143
+  *    discipline).
   *  - State must stay O(1)-or-label/calendar-bounded per key; the
   *    harness cannot enforce that, the pairing's docstring must
   *    argue it (SURVEY §2.7 discipline).
@@ -146,62 +148,55 @@ object Pairing {
     }
   }
 
-  /** Run a per-key stateful streaming pairing over the events table.
+  /** Microseconds since the epoch — the resolution Spark timestamps
+    * carry, so ordering by it equals ordering by (getTime, getNanos).
+    */
+  def micros(ts: Timestamp): Long =
+    Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000
+
+  /** The canonical per-key replay order of events. */
+  val eventOrder: EvRow => (Long, Long) = e => (micros(e.ts), e.event_id)
+
+  /** The events table as a typed stream (see [[EventFlow.fromEvents]]). */
+  def events(spark: SparkSession, dir: String): Dataset[EvRow] =
+    EventFlow.fromEvents(spark, dir).df.as[EvRow]
+
+  /** [[runStream]] over the events table in [[eventOrder]]. A pairing
+    * over a subset of events filters [[events]] and calls
+    * [[runStream]] itself.
     *
     * @param cols    sink column names for the emission tuples
-    * @param where   optional pre-keying filter (pushed to the scan)
     * @param key     grouping key (state partitioning)
     * @param init    initial state for a first-seen key
     * @param step    (key, state, batch rows in canonical order) →
     *                (next state, emissions)
     * @param project shapes the memory-sink table into the gate frame
     */
-  def run[K, S, O](spark: SparkSession, dir: String, cols: Seq[String],
-      where: Option[Column] = None)
+  def run[K, S, O](spark: SparkSession, dir: String, cols: Seq[String])
       (key: EvRow => K)(init: => S)
       (step: (K, S, Vector[EvRow]) => (S, Vector[O]))
       (project: DataFrame => DataFrame)
-      (implicit ek: Encoder[K], es: Encoder[S], eo: Encoder[O]): DataFrame = {
-    val name = s"pairing_mem_${runId.incrementAndGet()}"
-    withStreamShuffle(spark) {
-      val src = EventFlow.fromEvents(spark, dir).df
-      val ds = where.fold(src)(src.filter).as[EvRow]
-      val out = ds.groupByKey(key)(ek)
-        .flatMapGroupsWithState[S, O](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-          (k: K, it: Iterator[EvRow], state: GroupState[S]) =>
-            val ordered = it.toVector
-              .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-            val (s1, outs) = step(k, state.getOption.getOrElse(init), ordered)
-            state.update(s1)
-            outs.iterator
-        }(es, eo)
-      val q = out.toDF(cols: _*).writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    // localCheckpoint: a projection that SELF-JOINS the sink (q188's
-    // cohort join, q194's pair/audit joins) trips Spark's
-    // conflicting-reference resolution on MemoryPlan attributes
-    // (they don't dedup like relation outputs); checkpointing swaps
-    // in a LogicalRDD with fresh attribute ids on the standard dedup
-    // path. The sink is emission-sized, so the materialization is
-    // trivial. Then release the sink (see runStream).
-    project(EventFlow.drainMemorySink(spark, name))
-  }
+      (implicit ek: Encoder[K], es: Encoder[S], eo: Encoder[O]): DataFrame =
+    runStream[EvRow, K, S, O](spark, events(spark, dir), cols, eventOrder)(
+      key)(init)(step)(project)
 
-  /** Open any parquet table of the test schema as a file STREAM,
-    * handling both physical layouts the events source handles
-    * (single parquet FILE via glob filter — the driver's testdata;
-    * DIRECTORY of part files — Spark-written copies). Schema comes
-    * from a footer read; callers project/enrich/type the frame
-    * before handing it to [[runStream]].
+  /** Open any parquet table of the test schema as a file STREAM —
+    * the one stream-table opener, [[EventFlow.fromEvents]] included.
+    * File stream sources need a directory, so the read shape follows
+    * what is on disk: a DIRECTORY of part files (Spark-written copies)
+    * is read as one; a single parquet FILE (the gate's test corpus),
+    * or no literal child at all (date-partitioned trees), scopes the
+    * parent dir by glob filter. Schema comes from a footer read;
+    * callers project/enrich/type the frame before handing it to
+    * [[runStream]].
     */
   def tableStream(spark: SparkSession, dir: String, table: String): DataFrame = {
     // (isDir, schema) memo keyed by (dir, table) — r16: the footer
-    // probe + layout stat cost ~0.1 s per streaming query (measured,
-    // StreamProf), repeated for the SAME immutable path metadata by
-    // every pairing in a gate pass. Metadata only — no rows or
-    // results are memoized (same doctrine as Tables.schemaMemo).
+    // probe + layout stat cost ~0.1 s per streaming query, repeated
+    // for the SAME immutable path metadata by every pairing in a gate
+    // pass (`perfbench/run.py --workload stream_backfill --trace 1`
+    // reports the per-pass streaming layers). Metadata only — no rows
+    // or results are memoized (same doctrine as Tables.schemaMemo).
     val (isDir, schema) = streamSchemaMemo.computeIfAbsent((dir, table), { _ =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -276,13 +271,12 @@ object Pairing {
     * caller-prepared typed stream with a caller-declared canonical
     * replay order (a two-long sort key — (doc_id, 0) for documents,
     * (o_orderkey, 0) for orders, (l_orderkey, l_linenumber) for
-    * lineitem). Callers may enrich the stream with broadcast
-    * stream-static dimension joins before typing it (the q109
-    * idiom) — that is how the fact-table pairings (#29–#31) key
-    * their state by star-schema labels. Everything else matches
-    * [[run]]'s contract: state must be label/value-domain bounded,
-    * emissions land in an append memory sink, `project` shapes the
-    * gate frame.
+    * lineitem, [[eventOrder]] for events). Callers may enrich the
+    * stream with broadcast stream-static dimension joins before typing
+    * it (the q109 idiom) — that is how the fact-table pairings
+    * (#29–#31) key their state by star-schema labels. State must be
+    * label/value-domain bounded, emissions land in an append memory
+    * sink, `project` shapes the gate frame.
     *
     * State lifecycle (VERDICT r12 item 6): by default state lives
     * forever — correct for the AvailableNow parity gate, where every
@@ -316,7 +310,12 @@ object Pairing {
     val expAcc = expireHorizonMs.map(_ => expiredFor(spark))
     def maybeBig[T](body: => T): T =
       if (bigState) withBigStateStore(spark)(body) else body
-    maybeBig { withStreamShuffle(spark) {
+    // the drained sink is an eagerly checkpointed LogicalRDD: a
+    // projection that SELF-JOINS it (q188's cohort join, q194's
+    // pair/audit joins) would trip Spark's conflicting-reference
+    // resolution on MemoryPlan attributes, which don't dedup like
+    // relation outputs
+    val drained = maybeBig { withStreamShuffle(spark) {
       val out = stream.groupByKey(key)(ek)
         .flatMapGroupsWithState[S, O](OutputMode.Append, timeoutConf) {
           (k: K, it: Iterator[R], state: GroupState[S]) =>
@@ -333,23 +332,15 @@ object Pairing {
               outs.iterator
             }
         }(es, eo)
-      val q = out.toDF(cols: _*).writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      EventFlow(out.toDF(cols: _*)).toMemory(spark, name, "append")
     } }
-    // localCheckpoint: see [[run]] — MemoryPlan attributes break
-    // self-joining projections without it; the sink is emission-sized.
-    // Then RELEASE the sink (view + terminated-query registry) so the
-    // gate run's heap doesn't accumulate every pairing's emissions —
-    // the r15 EventFlow.toMemory lesson, applied to the same sink here.
-    project(EventFlow.drainMemorySink(spark, name))
+    project(drained)
   }
 
-  /** [[run]] over the DOCUMENTS table — the corpus-side pairing
-    * source (#27 streaming Neyman, #28 streaming quantile
-    * normalization). Same contract; the canonical per-key replay
-    * order is doc_id (unique and stable — documents carry no event
-    * time).
+  /** [[runStream]] over the DOCUMENTS table — the corpus-side
+    * pairing source (#27 streaming Neyman, #28 streaming quantile
+    * normalization). The canonical per-key replay order is doc_id
+    * (unique and stable — documents carry no event time).
     */
   def runDocs[K, S, O](spark: SparkSession, dir: String, cols: Seq[String])
       (key: DocRow => K)(init: => S)

@@ -81,6 +81,25 @@ class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
         hits.mkString("\n"))
   }
 
+  test("StreamQueries never hand-rolls a stateful memory-sink pairing") {
+    // a keyed-state pairing goes through Pairing.runStream (or, for
+    // q62's deva accumulate, Stateful) and every memory sink through
+    // EventFlow.toMemory — one copy of the fold, the sink start, the
+    // AvailableNow trigger and the drain, so a cut to the per-pairing
+    // floor is made once
+    val re = """\.writeStream\b|\bflatMapGroupsWithState\b""".r
+    val hits = Files.readAllLines(
+        Paths.get("src/main/scala/graft/queries/StreamQueries.scala"))
+      .asScala.zipWithIndex.collect {
+        case (line, i) if re.findFirstIn(line).isDefined &&
+          !Seq("*", "//", "/*").exists(line.trim.startsWith) =>
+          s"StreamQueries.scala:${i + 1}: ${line.trim}"
+      }
+    assert(hits.isEmpty,
+      "hand-rolled stream pipeline in StreamQueries (use Pairing.run/runStream " +
+        "or EventFlow.toMemory):\n" + hits.mkString("\n"))
+  }
+
   test("oracle SQL never floors an integral decode through DOUBLE") {
     // CAST(floor(CAST(x AS DOUBLE) / n) AS BIGINT) in an oracle
     // string — DuckDB spells the exact decode `//`. A `+` between

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{EventFlow, Stateful}
+import graft.streaming.{EventFlow, Pairing, Stateful}
 
 /** Streaming semantics specs with MemoryStream — the shapes the
   * DuckDB gate cannot exercise: incremental arrival, watermarks,
@@ -202,6 +202,48 @@ class StreamingSpec extends AnyFunSuite {
     q.awaitTermination()
     val ids = spark.table("ij_spec").select("cid").collect().map(_.getLong(0)).toSeq
     assert(ids == Seq(1L), s"only click 1 has a view within 10m, got $ids")
+  }
+
+  test("q62 streaming accumulate equals the same fold over the batch events") {
+    // Stateful runs flatMapGroupsWithState per group on batch
+    // Datasets too, so the gate's deva `accumulate` must equal its
+    // own fold over the batch events table, row for row
+    val sp = spark
+    import sp.implicits._
+    val dir = "/root/testdata/sf0.001"
+    val batch = Stateful.foldPerKey[Long, Pairing.EvRow, (Long, Long), (Long, Long, Long)](
+        Tables.events(spark, dir).as[Pairing.EvRow])(_.user_id)((0L, 0L))(
+        (s, e) => (s._1 + math.floor(e.value * 100 + 0.5).toLong, s._2 + 1))(
+        (k, s) => (k, s._1, s._2))
+      .collect().toSeq.sortBy(_._1)
+    val stream = graft.queries.StreamQueries.q62_stream_accumulate(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(stream.nonEmpty, "q62 emitted no rows")
+    assert(stream == batch,
+      s"stream fold diverges from batch: ${stream.size} vs ${batch.size} rows; " +
+        s"first diff ${stream.zip(batch).find(p => p._1 != p._2)}")
+  }
+
+  test("fromEvents reads a directory of part files as it reads the single file") {
+    // the gate corpus ships events.parquet as one FILE (nanos as
+    // long); Spark-written copies (the ScaleSmoke layout) are a
+    // DIRECTORY of part files with real timestamps
+    val dir = "/root/testdata/sf0.001"
+    val copy = java.nio.file.Files.createTempDirectory("graft_events_parts").toString
+    Tables.events(spark, dir).repartition(3).write.parquet(s"$copy/events.parquet")
+    val parts = new java.io.File(s"$copy/events.parquet").list().count(_.endsWith(".parquet"))
+    assert(parts == 3, s"expected 3 part files, got $parts")
+    def rows(d: String, name: String) = {
+      val flow = EventFlow.fromEvents(spark, d)
+      (flow.df.schema, flow.toMemory(spark, name, "append").collect().map(_.toString).sorted.toSeq)
+    }
+    val (fileSchema, fromFile) = rows(dir, "events_layout_file")
+    val (dirSchema, fromDir) = rows(copy, "events_layout_dir")
+    assert(fromFile.nonEmpty, "the single-file events read no rows")
+    assert(dirSchema == fileSchema, s"schemas differ:\n$dirSchema\n$fileSchema")
+    assert(fromDir == fromFile,
+      s"${fromDir.size} vs ${fromFile.size} rows; " +
+        s"first diff ${fromDir.zip(fromFile).find(p => p._1 != p._2)}")
   }
 
   test("rate source produces rows (deva from_periodic)") {
