@@ -7,6 +7,13 @@ object Bench {
     */
   private[graft] def session(cpus: Int): SparkSession = Sessions.local(cpus, cpus)
 
+  /** Compute every column of every row, as Verify's write does:
+    * `count()` lets Catalyst prune the plan to a row count (q44's
+    * keeps no MinHash), so it times less than the query. The one way
+    * graft and its tools time a query. */
+  def materialize(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val wallStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -48,12 +55,6 @@ object Bench {
           .find(_.startsWith("cpu ")).get.trim.split("\\s+")
         cpu(8).toDouble / 100.0
       } catch { case _: Throwable => -1.0 }
-
-    /** Compute every column of every row, as Verify's write does:
-      * `count()` lets Catalyst prune the plan to a row count (q44's
-      * keeps no MinHash), so it times less than the query. */
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
 
     /** Warm the per-(process, corpus dir) stores so measured times are
       * steady-state serving, not one-time builds: q73's persistent

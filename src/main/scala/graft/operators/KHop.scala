@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * that bookkeeping (a count job per round, `rdd.getNumPartitions`,
   * a coalesce wrapper, and a logical plan that unions every cached
   * round's full tree — 24k plan lines by round 4) cost 2–4× the
-  * traversal itself (KHopVariants A/B: 6.3 s shipped vs 1.3–2.4 s
-  * checkpointed at sf0.1, identical rows). Width now comes from AQE's
+  * traversal itself (the r16 A/B in PLANS.md: 6.3 s shipped vs
+  * 1.3–2.4 s checkpointed at sf0.1, identical rows). Width now comes from AQE's
   * byte-based partition coalescing (the shipped sessions' advisory
   * size with a 64 KB floor): tiny round frames fold to a few
   * partitions — no near-empty-task spray — while a catalog-sized

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.streaming.{EventFlow, Stateful}
-import graft.streaming.Pairing.{micros, withStreamShuffle}
+import graft.streaming.Pairing.micros
 import graft.functions.Determinism._
 
 /** Queries that run REAL Structured Streaming jobs inside the gate
@@ -20,7 +20,6 @@ import graft.functions.Determinism._
   */
 object StreamQueries {
 
-  private val runId = new AtomicInteger(0)
   // per-invocation q243 scratch isolation (ADVICE r13)
   private val q243Run = new AtomicInteger(0)
 
@@ -31,13 +30,10 @@ object StreamQueries {
     * (complete mode, so all windows are emitted at end of input).
     */
   def q60_stream_tumbling(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q60_mem_${runId.incrementAndGet()}"
-    val res = withStreamShuffle(spark) {
-      EventFlow.fromEvents(spark, dir)
-        .timedWindow("ts", "1 hour", Seq(col("event_type")),
-          Seq(count(lit(1)).as("n"), dsum(col("value")).as("v")))
-        .toMemory(spark, name, "complete")
-    }
+    val res = EventFlow.fromEvents(spark, dir)
+      .timedWindow("ts", "1 hour", Seq(col("event_type")),
+        Seq(count(lit(1)).as("n"), dsum(col("value")).as("v")))
+      .toMemory(spark, "complete")
     res.select(col("window.start").as("bucket"), col("event_type"), col("n"), col("v"))
       .orderBy(col("bucket"), col("event_type"))
   }
@@ -62,13 +58,10 @@ object StreamQueries {
     * eviction spec in StreamingSpec).
     */
   def q61_stream_unique(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q61_mem_${runId.incrementAndGet()}"
-    val res = withStreamShuffle(spark) {
-      EventFlow.fromEvents(spark, dir)
-        .withWatermark("ts", "7 days")
-        .uniqueWithinWatermark(Seq("user_id", "event_type"))
-        .toMemory(spark, name, "append")
-    }
+    val res = EventFlow.fromEvents(spark, dir)
+      .withWatermark("ts", "7 days")
+      .uniqueWithinWatermark(Seq("user_id", "event_type"))
+      .toMemory(spark, "append")
     res.select(col("user_id"), col("event_type"))
       .orderBy(col("user_id"), col("event_type"))
   }
@@ -83,14 +76,12 @@ object StreamQueries {
   def q62_stream_accumulate(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val name = s"q62_mem_${runId.incrementAndGet()}"
-    withStreamShuffle(spark) {
-      val folded = Stateful.foldPerKey[Long, EvRow, (Long, Long), (Long, Long, Long)](
-        graft.streaming.Pairing.events(spark, dir))(_.user_id)((0L, 0L))(
-        (s, e) => (s._1 + math.floor(e.value * 100 + 0.5).toLong, s._2 + 1))(
-        (k, s) => (k, s._1, s._2))
-      EventFlow(folded.toDF("user_id", "total_cents", "n")).toMemory(spark, name, "append")
-    }.orderBy(col("user_id"))
+    val folded = Stateful.foldPerKey[Long, EvRow, (Long, Long), (Long, Long, Long)](
+      graft.streaming.Pairing.events(spark, dir))(_.user_id)((0L, 0L))(
+      (s, e) => (s._1 + math.floor(e.value * 100 + 0.5).toLong, s._2 + 1))(
+      (k, s) => (k, s._1, s._2))
+    EventFlow(folded.toDF("user_id", "total_cents", "n")).toMemory(spark, "append")
+      .orderBy(col("user_id"))
   }
 
   val q62_stream_accumulate_sql: String =
@@ -104,13 +95,10 @@ object StreamQueries {
     * assignment semantics exactly.
     */
   def q63_stream_sliding(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q63_mem_${runId.incrementAndGet()}"
-    val res = withStreamShuffle(spark) {
-      EventFlow.fromEvents(spark, dir)
-        .slidingWindow("ts", "1 hour", "30 minutes", Seq(col("event_type")),
-          Seq(count(lit(1)).as("n"), dsum(col("value")).as("v")))
-        .toMemory(spark, name, "complete")
-    }
+    val res = EventFlow.fromEvents(spark, dir)
+      .slidingWindow("ts", "1 hour", "30 minutes", Seq(col("event_type")),
+        Seq(count(lit(1)).as("n"), dsum(col("value")).as("v")))
+      .toMemory(spark, "complete")
     res.select(col("window.start").as("bucket"), col("event_type"), col("n"), col("v"))
       .orderBy(col("bucket"), col("event_type"))
   }
@@ -136,13 +124,10 @@ object StreamQueries {
     * batch algorithm.
     */
   def q64_stream_session(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q64_mem_${runId.incrementAndGet()}"
-    val res = withStreamShuffle(spark) {
-      EventFlow.fromEvents(spark, dir)
-        .sessionWindow("ts", "30 minutes", Seq(col("user_id")),
-          Seq(count(lit(1)).as("n_events"), dsum(col("value")).as("v")))
-        .toMemory(spark, name, "complete")
-    }
+    val res = EventFlow.fromEvents(spark, dir)
+      .sessionWindow("ts", "30 minutes", Seq(col("user_id")),
+        Seq(count(lit(1)).as("n_events"), dsum(col("value")).as("v")))
+      .toMemory(spark, "complete")
     res.select(col("user_id"), col("session_window.start").as("session_start"),
         col("n_events"), col("v"))
       .orderBy(col("user_id"), col("session_start"))
@@ -175,21 +160,18 @@ object StreamQueries {
     * comparison pins the single-batch case.
     */
   def q69_stream_join(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q69_mem_${runId.incrementAndGet()}"
-    val res = withStreamShuffle(spark) {
-      val clicks = EventFlow.fromEvents(spark, dir)
-        .where(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("cts"))
-        .withWatermark("cts", "1 hour")
-      val purchases = EventFlow.fromEvents(spark, dir)
-        .where(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"), col("ts").as("pts"))
-        .withWatermark("pts", "1 hour")
-      clicks.intervalJoin(purchases,
-          col("user_id") === col("p_user") &&
-          col("pts") >= col("cts") && col("pts") <= col("cts") + expr("INTERVAL 1 HOUR"))
-        .toMemory(spark, name, "append")
-    }
+    val clicks = EventFlow.fromEvents(spark, dir)
+      .where(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("cts"))
+      .withWatermark("cts", "1 hour")
+    val purchases = EventFlow.fromEvents(spark, dir)
+      .where(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"), col("ts").as("pts"))
+      .withWatermark("pts", "1 hour")
+    val res = clicks.intervalJoin(purchases,
+        col("user_id") === col("p_user") &&
+        col("pts") >= col("cts") && col("pts") <= col("cts") + expr("INTERVAL 1 HOUR"))
+      .toMemory(spark, "append")
     res.select(col("click_id"), col("purchase_id"), col("user_id"))
       .orderBy(col("click_id"), col("purchase_id"))
   }
@@ -219,30 +201,22 @@ object StreamQueries {
     * intersection decomposition's only residual is global-only mass.
     */
   def q103_stream_drift(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q103_mem_${runId.incrementAndGet()}"
-    val hist = withStreamShuffle(spark) {
-      EventFlow.fromEvents(spark, dir)
-        .timedWindow("ts", "1 hour", Seq(col("event_type")),
-          Seq(count(lit(1)).as("n")))
-        .toMemory(spark, name, "complete")
-    }
-    // three derivations of the one histogram meet in a join; the
-    // memory-sink VIEW trips analyzer reference-dedup when self-joined
-    // through DataFrame lineage ("conflicting references in Join"), so
-    // the divergence runs as Spark SQL over a temp view — each view
-    // reference resolves to fresh attributes, and the text mirrors the
-    // DuckDB oracle clause-for-clause
-    hist.select(col("window.start").as("bucket"), col("event_type"), col("n"))
-      .createOrReplaceTempView(s"${name}_h")
-    spark.sql(
-      s"""WITH wt AS (SELECT bucket, SUM(n) AS wt FROM ${name}_h GROUP BY bucket),
-         |g AS (SELECT event_type, SUM(n) AS gn FROM ${name}_h GROUP BY event_type),
+    val hist = EventFlow.fromEvents(spark, dir)
+      .timedWindow("ts", "1 hour", Seq(col("event_type")),
+        Seq(count(lit(1)).as("n")))
+      .toMemory(spark, "complete")
+    // three derivations of the one histogram meet in a join, so the
+    // divergence runs as Spark SQL over a view (see [[overView]]); the
+    // text mirrors the DuckDB oracle clause-for-clause
+    overView(spark, hist.select(col("window.start").as("bucket"), col("event_type"), col("n"))) { h =>
+      s"""WITH wt AS (SELECT bucket, SUM(n) AS wt FROM $h GROUP BY bucket),
+         |g AS (SELECT event_type, SUM(n) AS gn FROM $h GROUP BY event_type),
          |gt AS (SELECT SUM(gn) AS gt FROM g),
          |pq AS (
          |  SELECT h.bucket, wt.wt,
          |    CAST(h.n AS DOUBLE) / CAST(wt.wt AS DOUBLE) AS p,
          |    CAST(g.gn AS DOUBLE) / CAST(gt.gt AS DOUBLE) AS q
-         |  FROM ${name}_h h JOIN wt USING (bucket) JOIN g USING (event_type)
+         |  FROM $h h JOIN wt USING (bucket) JOIN g USING (event_type)
          |  CROSS JOIN gt),
          |terms AS (
          |  SELECT bucket, wt,
@@ -261,8 +235,26 @@ object StreamQueries {
          |  0.5D * (CAST(sa AS DOUBLE) + CAST(sb AS DOUBLE) +
          |    (1.0D - CAST(spa AS DOUBLE)) * 0.6931471805599453D +
          |    (1.0D - CAST(spb AS DOUBLE)) * 0.6931471805599453D) AS js
-         |FROM agg ORDER BY bucket""".stripMargin)
+         |FROM agg ORDER BY bucket""".stripMargin
+    }
   }
+
+  /** `sql(view)` over `df` registered as a fresh temp view, which is
+    * dropped again before returning. For projections in which several
+    * derivations of one drained sink meet in a join: the drained frame
+    * trips the analyzer's reference dedup when self-joined through
+    * DataFrame lineage ("conflicting references in Join"), while each
+    * SQL reference to a view resolves to fresh attributes. spark.sql
+    * analyzes eagerly, so the view can go as soon as the frame exists;
+    * left registered it would pin the drained frame in the session
+    * catalog for the life of the process.
+    */
+  private def overView(spark: SparkSession, df: DataFrame)(sql: String => String): DataFrame = {
+    val view = s"graft_view_${viewId.incrementAndGet()}"
+    df.createOrReplaceTempView(view)
+    try spark.sql(sql(view)) finally spark.catalog.dropTempView(view)
+  }
+  private val viewId = new AtomicInteger(0)
 
   val q103_stream_drift_sql: String =
     s"""WITH w AS (
@@ -312,17 +304,14 @@ object StreamQueries {
     * DECIMAL(18,2) value sums (dsum).
     */
   def q109_stream_enrich(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q109_mem_${runId.incrementAndGet()}"
     val dim = Tables.customer(spark, dir)
       .join(Tables.nation(spark, dir), col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    val res = withStreamShuffle(spark) {
-      val enriched = EventFlow.fromEvents(spark, dir).df
+    val res = EventFlow(Tables.stream(spark, dir, "events")
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .groupBy(col("n_name"), col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("v"))
-      EventFlow(enriched).toMemory(spark, name, "complete")
-    }
+        .agg(count(lit(1)).as("n"), dsum(col("value")).as("v")))
+      .toMemory(spark, "complete")
     res.select(col("n_name").as("nation"), col("event_type"), col("n"), col("v"))
       .orderBy(col("nation"), col("event_type"))
   }
@@ -406,13 +395,10 @@ object StreamQueries {
     * order shared with the oracle's naive ROW_NUMBER window.
     */
   def q114_stream_trending(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q114_mem_${runId.incrementAndGet()}"
-    val hist = withStreamShuffle(spark) {
-      EventFlow.fromEvents(spark, dir)
-        .timedWindow("ts", "1 day", Seq(col("user_id")),
-          Seq(count(lit(1)).as("n")))
-        .toMemory(spark, name, "complete")
-    }
+    val hist = EventFlow.fromEvents(spark, dir)
+      .timedWindow("ts", "1 day", Seq(col("user_id")),
+        Seq(count(lit(1)).as("n")))
+      .toMemory(spark, "complete")
     val counts = hist.select(col("window.start").as("bucket"), col("user_id"), col("n"))
     graft.operators.GroupTopK.rank(counts, Seq("bucket"),
         Seq(col("n").desc, col("user_id")), 5, "pos")
@@ -444,14 +430,11 @@ object StreamQueries {
     * spec additionally asserts bit-equality against q121 itself.
     */
   def q124_stream_snapshot(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q124_mem_${runId.incrementAndGet()}"
-    val res = withStreamShuffle(spark) {
-      EventFlow(EventFlow.fromEvents(spark, dir).df
-          .groupBy(col("user_id"))
-          .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
-            dec2(col("value")).as("v"))).as("m")))
-        .toMemory(spark, name, "complete")
-    }
+    val res = EventFlow(Tables.stream(spark, dir, "events")
+        .groupBy(col("user_id"))
+        .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
+          dec2(col("value")).as("v"))).as("m")))
+      .toMemory(spark, "complete")
     res.select(col("user_id"),
         col("m.ts").as("last_ts"),
         col("m.event_id").as("last_event"),
@@ -696,14 +679,11 @@ object StreamQueries {
     * parity spec.
     */
   def q168_stream_sliding_distinct(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q168_mem_${runId.incrementAndGet()}"
-    val res = withStreamShuffle(spark) {
-      EventFlow.fromEvents(spark, dir)
-        .select(col("ts"), col("user_id"), to_date(col("ts")).as("day"))
-        .withWatermark("ts", "7 days")
-        .uniqueWithinWatermark(Seq("user_id", "day"))
-        .toMemory(spark, name, "append")
-    }
+    val res = EventFlow.fromEvents(spark, dir)
+      .select(col("ts"), col("user_id"), to_date(col("ts")).as("day"))
+      .withWatermark("ts", "7 days")
+      .uniqueWithinWatermark(Seq("user_id", "day"))
+      .toMemory(spark, "append")
     val days = res.select(col("user_id"), col("day"))
     val ends = days.select(col("day").as("window_end")).distinct()
     days
@@ -730,30 +710,26 @@ object StreamQueries {
     * spec against the batch query.
     */
   def q170_stream_quantiles(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q170_mem_${runId.incrementAndGet()}"
-    val hist = withStreamShuffle(spark) {
-      EventFlow(EventFlow.fromEvents(spark, dir).df
-          .groupBy(col("event_type"), dec2(col("value")).as("v"))
-          .agg(count(lit(1)).as("c")))
-        .toMemory(spark, name, "complete")
-    }
-    // two derivations of the one histogram meet in a join — the q103
-    // memory-sink-view pitfall ("conflicting references in Join"), so
-    // the cumulative-rank projection runs as Spark SQL over a temp
-    // view, mirroring the oracle clause-for-clause
-    hist.createOrReplaceTempView(s"${name}_h")
-    spark.sql(
+    val hist = EventFlow(Tables.stream(spark, dir, "events")
+        .groupBy(col("event_type"), dec2(col("value")).as("v"))
+        .agg(count(lit(1)).as("c")))
+      .toMemory(spark, "complete")
+    // two derivations of the one histogram meet in a join, so the
+    // cumulative-rank projection runs as Spark SQL over a view (see
+    // [[overView]]), mirroring the oracle clause-for-clause
+    overView(spark, hist) { h =>
       s"""WITH cum AS (
          |  SELECT event_type, v, c,
          |    SUM(c) OVER (PARTITION BY event_type ORDER BY v) AS cum
-         |  FROM ${name}_h),
-         |tot AS (SELECT event_type, SUM(c) AS n FROM ${name}_h GROUP BY event_type)
+         |  FROM $h),
+         |tot AS (SELECT event_type, SUM(c) AS n FROM $h GROUP BY event_type)
          |SELECT c.event_type, ps.p, CAST(MIN(c.v) AS DOUBLE) AS q
          |FROM cum c JOIN tot t ON c.event_type = t.event_type
          |CROSS JOIN (SELECT explode(array(50L, 90L, 99L)) AS p) ps
          |WHERE c.cum >= (ps.p * t.n + 99) div 100
          |GROUP BY c.event_type, ps.p
-         |ORDER BY c.event_type, ps.p""".stripMargin)
+         |ORDER BY c.event_type, ps.p""".stripMargin
+    }
   }
 
   /** Same oracle as the batch exact quantiles — the point. */
@@ -805,7 +781,6 @@ object StreamQueries {
   def q172_stream_transitions(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val view = s"q172_pairs_${runId.incrementAndGet()}"
     graft.streaming.Pairing.run[Long, (Long, Long, String), (String, String)](
       spark, dir, Seq("event_type", "next_type"))(
       _.user_id)((Long.MinValue, Long.MinValue, "")) { (_, last0, ordered) =>
@@ -818,22 +793,18 @@ object StreamQueries {
         (last, out.result())
       } { pairs =>
         // counts and totals both derive from the one emitted-pairs
-        // frame — the q103 memory-sink-view pitfall — so the projection
-        // runs as Spark SQL over a temp view, mirroring the oracle;
-        // spark.sql analyzes eagerly, so the helper view can be dropped
-        // right after (it would otherwise pin the drained frame)
-        pairs.createOrReplaceTempView(view)
-        val out = spark.sql(
+        // frame, so the projection runs as Spark SQL over a view (see
+        // [[overView]]), mirroring the oracle
+        overView(spark, pairs) { v =>
           s"""WITH tr AS (
              |  SELECT event_type, next_type, COUNT(*) AS c
-             |  FROM $view GROUP BY event_type, next_type),
+             |  FROM $v GROUP BY event_type, next_type),
              |tot AS (SELECT event_type, SUM(c) AS n FROM tr GROUP BY event_type)
              |SELECT tr.event_type, tr.next_type, tr.c,
              |  CAST(tr.c AS DOUBLE) / CAST(t.n AS DOUBLE) AS p
              |FROM tr JOIN tot t ON tr.event_type = t.event_type
-             |ORDER BY tr.event_type, tr.next_type""".stripMargin)
-        spark.catalog.dropTempView(view)
-        out
+             |ORDER BY tr.event_type, tr.next_type""".stripMargin
+        }
       }
   }
 
@@ -891,20 +862,17 @@ object StreamQueries {
     * Oracle is q131's SQL verbatim + a parity spec.
     */
   def q181_stream_regression(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q181_mem_${runId.incrementAndGet()}"
-    val m = withStreamShuffle(spark) {
-      EventFlow(EventFlow.fromEvents(spark, dir).df
-          .select(col("event_type"), to_date(col("ts")).as("day"),
-            hour(col("ts")).cast("long").as("x"),
-            (dec2(col("value")) * 100).cast("long").as("y"))
-          .groupBy(col("event_type"), col("day"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-            sum(col("x") * col("x")).as("sxx"),
-            sum(col("y") * col("y")).as("syy"),
-            sum(col("x") * col("y")).as("sxy")))
-        .toMemory(spark, name, "complete")
-    }
+    val m = EventFlow(Tables.stream(spark, dir, "events")
+        .select(col("event_type"), to_date(col("ts")).as("day"),
+          hour(col("ts")).cast("long").as("x"),
+          (dec2(col("value")) * 100).cast("long").as("y"))
+        .groupBy(col("event_type"), col("day"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+          sum(col("x") * col("x")).as("sxx"),
+          sum(col("y") * col("y")).as("syy"),
+          sum(col("x") * col("y")).as("sxy")))
+      .toMemory(spark, "complete")
     val vx = col("n") * col("sxx") - col("sx") * col("sx")
     val vy = col("n") * col("syy") - col("sy") * col("sy")
     val cov = col("n") * col("sxy") - col("sx") * col("sy")
@@ -1536,7 +1504,7 @@ object StreamQueries {
   def q248_stream_ann_topk(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "embeddings")
+    val st = Tables.stream(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .as[graft.streaming.Pairing.VecRow]
     graft.streaming.Pairing.runStream[graft.streaming.Pairing.VecRow,
@@ -1569,7 +1537,7 @@ object StreamQueries {
   def q251_stream_ivf_topk(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "embeddings")
+    val st = Tables.stream(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .as[graft.streaming.Pairing.VecRow]
     graft.streaming.Pairing.runStream[graft.streaming.Pairing.VecRow,
@@ -1605,7 +1573,7 @@ object StreamQueries {
   def q271_stream_semdedup(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "embeddings")
+    val st = Tables.stream(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .as[graft.streaming.Pairing.VecRow]
     graft.streaming.Pairing.runStream[graft.streaming.Pairing.VecRow,
@@ -1640,7 +1608,7 @@ object StreamQueries {
   def q282_stream_ivf_pq(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "embeddings")
+    val st = Tables.stream(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .as[graft.streaming.Pairing.VecRow]
     graft.streaming.Pairing.runStream[graft.streaming.Pairing.VecRow,
@@ -1674,13 +1642,10 @@ object StreamQueries {
     * SourceLintSpec pins that).
     */
   def q253_stream_median_test(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q253_mem_${runId.incrementAndGet()}"
-    val hist = withStreamShuffle(spark) {
-      EventFlow(EventFlow.fromEvents(spark, dir).df
-          .groupBy(col("event_type"), StatsQueries.cents(col("value")).as("c"))
-          .agg(count(lit(1)).as("cnt")))
-        .toMemory(spark, name, "complete")
-    }
+    val hist = EventFlow(Tables.stream(spark, dir, "events")
+        .groupBy(col("event_type"), StatsQueries.cents(col("value")).as("c"))
+        .agg(count(lit(1)).as("cnt")))
+      .toMemory(spark, "complete")
     StatsQueries.medianTestFrom(hist)
   }
 
@@ -1699,13 +1664,10 @@ object StreamQueries {
     * kruskalWallisFrom, shared oracle).
     */
   def q263_stream_kruskal_wallis(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q263_mem_${runId.incrementAndGet()}"
-    val hist = withStreamShuffle(spark) {
-      EventFlow(EventFlow.fromEvents(spark, dir).df
-          .groupBy(col("event_type"), StatsQueries.cents(col("value")).as("c"))
-          .agg(count(lit(1)).as("cnt")))
-        .toMemory(spark, name, "complete")
-    }
+    val hist = EventFlow(Tables.stream(spark, dir, "events")
+        .groupBy(col("event_type"), StatsQueries.cents(col("value")).as("c"))
+        .agg(count(lit(1)).as("cnt")))
+      .toMemory(spark, "complete")
     StatsQueries.kruskalWallisFrom(hist)
   }
 
@@ -1725,14 +1687,11 @@ object StreamQueries {
     * histogram (shared zipfFrom, shared oracle).
     */
   def q254_stream_zipf(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q254_mem_${runId.incrementAndGet()}"
-    val freq = withStreamShuffle(spark) {
-      EventFlow(graft.streaming.Pairing.tableStream(spark, dir, "documents")
-          .select(col("lang"),
-            explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok"))
-          .groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("c")))
-        .toMemory(spark, name, "complete")
-    }
+    val freq = EventFlow(Tables.stream(spark, dir, "documents")
+        .select(col("lang"),
+          explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok"))
+        .groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("c")))
+      .toMemory(spark, "complete")
     TextQueries.zipfFrom(freq)
   }
 
@@ -1754,15 +1713,12 @@ object StreamQueries {
     */
   def q255_stream_heavy_hitters(spark: SparkSession, dir: String): DataFrame = {
     val depth = 5; val width = 2048
-    val name = s"q255_mem_${runId.incrementAndGet()}"
-    val counts = withStreamShuffle(spark) {
-      EventFlow(graft.streaming.Pairing.tableStream(spark, dir, "documents")
-          .select(explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok"))
-          .select(col("tok"),
-            pmod(hash60(col("tok")), lit(graft.operators.Dedup.P)).as("h"))
-          .groupBy(col("tok"), col("h")).agg(count(lit(1)).as("exact_n")))
-        .toMemory(spark, name, "complete")
-    }
+    val counts = EventFlow(Tables.stream(spark, dir, "documents")
+        .select(explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok"))
+        .select(col("tok"),
+          pmod(hash60(col("tok")), lit(graft.operators.Dedup.P)).as("h"))
+        .groupBy(col("tok"), col("h")).agg(count(lit(1)).as("exact_n")))
+      .toMemory(spark, "complete")
     def cellKeys = (0 until depth).map { j =>
       val (a, c) = graft.operators.Dedup.perms(j)
       struct(lit(j).as("j"),
@@ -1809,20 +1765,17 @@ object StreamQueries {
   def q256_stream_pmi(spark: SparkSession, dir: String): DataFrame = {
     val TA = graft.operators.TextAnalysis
     val tk = TA.tokens(col("text"))
-    val name = s"q256ub_mem_${runId.incrementAndGet()}"
     val uniE = arrays_zip(tk.as("x"),
       array_repeat(lit(null).cast("string"), size(tk)).as("y"))
-    val hist = withStreamShuffle(spark) {
-      // raw text through an exchange before the tokenize+explode —
-      // the q259/q261 single-file micro-batch scan lesson
-      EventFlow(graft.streaming.Pairing.tableStream(spark, dir, "documents")
-          .select(col("doc_id"), col("text"))
-          .repartition(col("doc_id"))
-          .select(explode(concat(uniE, TA.adjacentPairs(tk))).as("e"))
-          .select(col("e.x").as("x"), col("e.y").as("y"))
-          .groupBy(col("x"), col("y")).agg(count(lit(1)).as("c")))
-        .toMemory(spark, name, "complete")
-    }
+    // raw text through an exchange before the tokenize+explode —
+    // the q259/q261 single-file micro-batch scan lesson
+    val hist = EventFlow(Tables.stream(spark, dir, "documents")
+        .select(col("doc_id"), col("text"))
+        .repartition(col("doc_id"))
+        .select(explode(concat(uniE, TA.adjacentPairs(tk))).as("e"))
+        .select(col("e.x").as("x"), col("e.y").as("y"))
+        .groupBy(col("x"), col("y")).agg(count(lit(1)).as("c")))
+      .toMemory(spark, "complete")
     TextQueries.pmiFrom(
       hist.filter(col("y").isNull).select(col("x").as("tok"), col("c")),
       hist.filter(col("y").isNotNull)
@@ -1842,14 +1795,11 @@ object StreamQueries {
     * replay verbatim (shared vocabCoverageFrom, shared oracle).
     */
   def q257_stream_vocab_coverage(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q257_mem_${runId.incrementAndGet()}"
-    val freq = withStreamShuffle(spark) {
-      EventFlow(graft.streaming.Pairing.tableStream(spark, dir, "documents")
-          .select(col("lang"),
-            explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok"))
-          .groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("c")))
-        .toMemory(spark, name, "complete")
-    }
+    val freq = EventFlow(Tables.stream(spark, dir, "documents")
+        .select(col("lang"),
+          explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok"))
+        .groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("c")))
+      .toMemory(spark, "complete")
     TextQueries.vocabCoverageFrom(freq)
   }
 
@@ -1882,7 +1832,7 @@ object StreamQueries {
     import sp.implicits._
     // raw text through an exchange before the interpreted tokenize —
     // the q259/q261 single-file micro-batch scan lesson
-    val base = graft.streaming.Pairing.tableStream(spark, dir, "documents")
+    val base = Tables.stream(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .repartition(col("doc_id"))
       .select(col("doc_id"), TA.tokens(col("text")).as("ts"))
@@ -1935,7 +1885,7 @@ object StreamQueries {
     // raw text through an exchange before the interpreted tokenize —
     // the q107 batch lesson applied to the single-file micro-batch
     // scan (see q261)
-    val base = graft.streaming.Pairing.tableStream(spark, dir, "documents")
+    val base = Tables.stream(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
       .repartition(col("doc_id"))
       .select(col("doc_id"), col("lang"), TA.tokens(col("text")).as("ts"))
@@ -2000,7 +1950,7 @@ object StreamQueries {
     val terms = TextQueries.bm25Terms.toSet
     // raw text through an exchange before the interpreted tokenize —
     // the q259/q261 single-file micro-batch scan lesson
-    val base = graft.streaming.Pairing.tableStream(spark, dir, "documents")
+    val base = Tables.stream(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .repartition(col("doc_id"))
       .select(col("doc_id"), TA.tokens(col("text")).as("ts"))
@@ -2049,17 +1999,14 @@ object StreamQueries {
     */
   def q269_stream_js_divergence(spark: SparkSession, dir: String): DataFrame = {
     val TA = graft.operators.TextAnalysis
-    val name = s"q269_mem_${runId.incrementAndGet()}"
-    val freq = withStreamShuffle(spark) {
-      // raw text through an exchange before the interpreted tokenize
-      // explode — the q259/q261 single-file micro-batch scan lesson
-      EventFlow(graft.streaming.Pairing.tableStream(spark, dir, "documents")
-          .select(col("source"), col("doc_id"), col("text"))
-          .repartition(col("doc_id"))
-          .select(col("source"), explode(TA.tokens(col("text"))).as("tok"))
-          .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c")))
-        .toMemory(spark, name, "complete")
-    }
+    // raw text through an exchange before the interpreted tokenize
+    // explode — the q259/q261 single-file micro-batch scan lesson
+    val freq = EventFlow(Tables.stream(spark, dir, "documents")
+        .select(col("source"), col("doc_id"), col("text"))
+        .repartition(col("doc_id"))
+        .select(col("source"), explode(TA.tokens(col("text"))).as("tok"))
+        .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c")))
+      .toMemory(spark, "complete")
     TextQueries.jsDivergenceFrom(freq)
   }
 
@@ -2091,7 +2038,7 @@ object StreamQueries {
     import sp.implicits._
     // raw text through an exchange before the interpreted
     // tokenize+shingle pipeline — the q259/q261 scan lesson
-    val base = graft.streaming.Pairing.tableStream(spark, dir, "documents")
+    val base = Tables.stream(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .repartition(col("doc_id"))
       .select(col("doc_id"),
@@ -2137,8 +2084,7 @@ object StreamQueries {
     */
   @volatile private var sigMemo:
       (org.apache.spark.SparkContext, String, DataFrame, Seq[DataFrame]) = null
-  private def streamSigFrame(spark: SparkSession, dir: String,
-      tag: String): DataFrame = synchronized {
+  private def streamSigFrame(spark: SparkSession, dir: String): DataFrame = synchronized {
     val sc = spark.sparkContext
     if (sigMemo == null || (sigMemo._1 ne sc) || sc.isStopped ||
         sigMemo._2 != dir) {
@@ -2150,7 +2096,7 @@ object StreamQueries {
       // — the same heap-accumulation class toMemory's release targets.
       if (sigMemo != null && (sigMemo._1 eq sc) && !sc.isStopped)
         sigMemo._4.foreach(releaseCheckpoint)
-      val (sig, ckpts) = buildSigFrame(spark, dir, tag)
+      val (sig, ckpts) = buildSigFrame(spark, dir)
       sigMemo = (sc, dir, sig, ckpts)
     }
     sigMemo._3
@@ -2164,34 +2110,27 @@ object StreamQueries {
         l.rdd.unpersist(blocking = false)
       case _ =>
     }
-  private def buildSigFrame(spark: SparkSession, dir: String,
-      tag: String): (DataFrame, Seq[DataFrame]) = {
+  private def buildSigFrame(spark: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     val TA = graft.operators.TextAnalysis
-    val n1 = s"${tag}i_mem_${runId.incrementAndGet()}"
-    val n2 = s"${tag}h_mem_${runId.incrementAndGet()}"
     // no extra localCheckpoint here: toMemory already returns its
     // eagerly-checkpointed LogicalRDD — a second
     // checkpoint would double the pinned copy AND hide the inner one
     // from releaseCheckpoint (the memo release would then free only
     // the outer copy while the corpus-sized inner blocks lingered
     // until the ContextCleaner got to them)
-    val ids = withStreamShuffle(spark) {
-      EventFlow(graft.streaming.Pairing.tableStream(spark, dir, "documents")
-          .groupBy(col("doc_id")).agg(count(lit(1)).as("cnt")))
-        .toMemory(spark, n1, "complete")
-    }
-    val hashes = withStreamShuffle(spark) {
-      // raw text through an exchange before the interpreted
-      // tokenize+shingle explode — the q259/q261 scan lesson
-      EventFlow(graft.streaming.Pairing.tableStream(spark, dir, "documents")
-          .select(col("doc_id"), col("text"))
-          .repartition(col("doc_id"))
-          .select(col("doc_id"),
-            explode(TA.shingles(TA.tokens(col("text")), 3)).as("s"))
-          .select(col("doc_id"), graft.operators.Dedup.baseHash(col("s")).as("h"))
-          .groupBy(col("doc_id"), col("h")).agg(count(lit(1)).as("cnt")))
-        .toMemory(spark, n2, "complete")
-    }
+    val ids = EventFlow(Tables.stream(spark, dir, "documents")
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("cnt")))
+      .toMemory(spark, "complete")
+    // raw text through an exchange before the interpreted
+    // tokenize+shingle explode — the q259/q261 scan lesson
+    val hashes = EventFlow(Tables.stream(spark, dir, "documents")
+        .select(col("doc_id"), col("text"))
+        .repartition(col("doc_id"))
+        .select(col("doc_id"),
+          explode(TA.shingles(TA.tokens(col("text")), 3)).as("s"))
+        .select(col("doc_id"), graft.operators.Dedup.baseHash(col("s")).as("h"))
+        .groupBy(col("doc_id"), col("h")).agg(count(lit(1)).as("cnt")))
+      .toMemory(spark, "complete")
     (TextQueries.sigFromHashes(
       ids.select(col("doc_id")), hashes.select(col("doc_id"), col("h"))),
       Seq(ids, hashes))
@@ -2208,7 +2147,7 @@ object StreamQueries {
     * shared oracle).
     */
   def q276_stream_minhash_pairs(spark: SparkSession, dir: String): DataFrame =
-    TextQueries.minhashPairsFrom(streamSigFrame(spark, dir, "q276"))
+    TextQueries.minhashPairsFrom(streamSigFrame(spark, dir))
 
   /** Same oracle as the batch LSH pairs — the point. */
   val q276_stream_minhash_pairs_sql: String =
@@ -2224,7 +2163,7 @@ object StreamQueries {
     * recursive-CTE oracle).
     */
   def q277_stream_dedup_clusters(spark: SparkSession, dir: String): DataFrame =
-    TextQueries.dedupClustersFrom(streamSigFrame(spark, dir, "q277"))
+    TextQueries.dedupClustersFrom(streamSigFrame(spark, dir))
 
   /** Same oracle as the batch dedup clusters — the point. */
   val q277_stream_dedup_clusters_sql: String =
@@ -2242,14 +2181,11 @@ object StreamQueries {
     * sourceOverlapFrom, shared oracle).
     */
   def q278_stream_source_overlap(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q278_mem_${runId.incrementAndGet()}"
-    val d = withStreamShuffle(spark) {
-      EventFlow(graft.streaming.Pairing.tableStream(spark, dir, "documents")
-          .select(col("doc_id"), col("source"), col("text"))
-          .groupBy(col("doc_id"))
-          .agg(max(struct(col("source"), col("text"))).as("b")))
-        .toMemory(spark, name, "complete")
-    }
+    val d = EventFlow(Tables.stream(spark, dir, "documents")
+        .select(col("doc_id"), col("source"), col("text"))
+        .groupBy(col("doc_id"))
+        .agg(max(struct(col("source"), col("text"))).as("b")))
+      .toMemory(spark, "complete")
     TextQueries.sourceOverlapFrom(d
       .select(col("doc_id"), col("b.source").as("source"), col("b.text").as("text")))
   }
@@ -2269,17 +2205,14 @@ object StreamQueries {
     */
   def q279_stream_bpe_pairs(spark: SparkSession, dir: String): DataFrame = {
     val TA = graft.operators.TextAnalysis
-    val name = s"q279_mem_${runId.incrementAndGet()}"
-    val wf = withStreamShuffle(spark) {
-      // raw text through an exchange before the interpreted tokenize
-      // explode — the q259/q261 scan lesson
-      EventFlow(graft.streaming.Pairing.tableStream(spark, dir, "documents")
-          .select(col("doc_id"), col("text"))
-          .repartition(col("doc_id"))
-          .select(explode(TA.tokens(col("text"))).as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).as("freq")))
-        .toMemory(spark, name, "complete")
-    }
+    // raw text through an exchange before the interpreted tokenize
+    // explode — the q259/q261 scan lesson
+    val wf = EventFlow(Tables.stream(spark, dir, "documents")
+        .select(col("doc_id"), col("text"))
+        .repartition(col("doc_id"))
+        .select(explode(TA.tokens(col("text"))).as("w"))
+        .groupBy(col("w")).agg(count(lit(1)).as("freq")))
+      .toMemory(spark, "complete")
     TextQueries.bpePairsFrom(wf)
   }
 
@@ -2298,14 +2231,11 @@ object StreamQueries {
     * shared funnelFrom tail (shared oracle).
     */
   def q280_stream_funnel(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q280_mem_${runId.incrementAndGet()}"
-    val d = withStreamShuffle(spark) {
-      EventFlow(graft.streaming.Pairing.tableStream(spark, dir, "documents")
-          .select(col("doc_id"), col("source"), col("lang"), col("text"))
-          .groupBy(col("doc_id"))
-          .agg(max(struct(col("source"), col("lang"), col("text"))).as("b")))
-        .toMemory(spark, name, "complete")
-    }
+    val d = EventFlow(Tables.stream(spark, dir, "documents")
+        .select(col("doc_id"), col("source"), col("lang"), col("text"))
+        .groupBy(col("doc_id"))
+        .agg(max(struct(col("source"), col("lang"), col("text"))).as("b")))
+      .toMemory(spark, "complete")
     TextQueries.funnelFrom(d
       .select(col("doc_id"), col("b.source").as("source"),
         col("b.lang").as("lang"), col("b.text").as("text")))
@@ -2326,13 +2256,10 @@ object StreamQueries {
     * from it (shared mixtureExactFrom, shared oracle).
     */
   def q281_stream_mixture_exact(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q281_mem_${runId.incrementAndGet()}"
-    val d = withStreamShuffle(spark) {
-      EventFlow(graft.streaming.Pairing.tableStream(spark, dir, "documents")
-          .select(col("doc_id"), col("source"))
-          .groupBy(col("doc_id")).agg(max(col("source")).as("source")))
-        .toMemory(spark, name, "complete")
-    }
+    val d = EventFlow(Tables.stream(spark, dir, "documents")
+        .select(col("doc_id"), col("source"))
+        .groupBy(col("doc_id")).agg(max(col("source")).as("source")))
+      .toMemory(spark, "complete")
     TextQueries.mixtureExactFrom(d)
   }
 
@@ -2349,13 +2276,10 @@ object StreamQueries {
     * mixtureApplyFrom, shared oracle).
     */
   def q283_stream_mixture_apply(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"q283_mem_${runId.incrementAndGet()}"
-    val d = withStreamShuffle(spark) {
-      EventFlow(graft.streaming.Pairing.tableStream(spark, dir, "documents")
-          .select(col("doc_id"), col("source"))
-          .groupBy(col("doc_id")).agg(max(col("source")).as("source")))
-        .toMemory(spark, name, "complete")
-    }
+    val d = EventFlow(Tables.stream(spark, dir, "documents")
+        .select(col("doc_id"), col("source"))
+        .groupBy(col("doc_id")).agg(max(col("source")).as("source")))
+      .toMemory(spark, "complete")
     TextQueries.mixtureApplyFrom(d)
   }
 
@@ -2381,7 +2305,7 @@ object StreamQueries {
   def q260_stream_edit_pairs(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val base = graft.streaming.Pairing.tableStream(spark, dir, "documents")
+    val base = Tables.stream(spark, dir, "documents")
       .select(md5(col("text")).as("cls"), col("doc_id"), col("text"))
       .as[graft.streaming.Pairing.ClsDoc]
     graft.streaming.Pairing.runStream[graft.streaming.Pairing.ClsDoc,
@@ -2436,7 +2360,7 @@ object StreamQueries {
     // is one task, and leaving the HOF pipeline on it serializes
     // the whole maintenance pass (the q127/q107 batch lesson,
     // measured ~9 s → ~6 s at sf0.1 here)
-    val base = graft.streaming.Pairing.tableStream(spark, dir, "documents")
+    val base = Tables.stream(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .repartition(col("doc_id"))
       .select(col("doc_id"),
@@ -2724,7 +2648,7 @@ object StreamQueries {
     import sp.implicits._
     val dim = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "orders")
+    val st = Tables.stream(spark, dir, "orders")
       .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey").as("ok"), col("c_mktsegment").as("seg"),
         col("o_orderpriority").as("pri"))
@@ -2757,7 +2681,7 @@ object StreamQueries {
   def q210_stream_benford(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "lineitem")
+    val st = Tables.stream(spark, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_linenumber").cast("long").as("ln"),
         substring((dec2(col("l_extendedprice")) * 100).cast("long").cast("string"), 1, 1)
           .cast("int").as("digit"))
@@ -2798,7 +2722,7 @@ object StreamQueries {
       .join(Tables.nation(spark, dir), col("c_nationkey") === col("n_nationkey"))
       .join(Tables.region(spark, dir), col("n_regionkey") === col("r_regionkey"))
       .select(col("c_custkey"), col("r_name"))
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "orders")
+    val st = Tables.stream(spark, dir, "orders")
       .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey").as("ok"), col("r_name"),
         (dec2(col("o_totalprice")) * 100).cast("long").as("c"))
@@ -2843,7 +2767,7 @@ object StreamQueries {
   def q212_stream_weighted_median(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "lineitem")
+    val st = Tables.stream(spark, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_linenumber").cast("long").as("ln"),
         col("l_returnflag").as("rf"),
         (dec2(col("l_extendedprice")) * 100).cast("long").as("v"),
@@ -2896,7 +2820,7 @@ object StreamQueries {
     val vars = Seq("q", "p", "d", "t")
     val names = vars.map(a => s"s_$a") ++
       (for (a <- vars; b <- vars if a <= b) yield s"s_$a$b")
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "lineitem")
+    val st = Tables.stream(spark, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_linenumber").cast("long").as("ln"),
         (col("l_orderkey") % 32).cast("int").as("shard"),
         (dec2(col("l_quantity")) * 100).cast("long").as("q"),
@@ -2954,7 +2878,7 @@ object StreamQueries {
   def q214_stream_abc(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "lineitem")
+    val st = Tables.stream(spark, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_linenumber").cast("long").as("ln"),
         col("l_partkey").as("pk"),
         (dec2(col("l_extendedprice")) * 100).cast("long").as("c"))
@@ -2992,7 +2916,7 @@ object StreamQueries {
     import sp.implicits._
     val ord = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "lineitem")
+    val st = Tables.stream(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber").cast("long").as("ln"),
         col("l_shipdate"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -3040,7 +2964,7 @@ object StreamQueries {
     val sp = spark
     import sp.implicits._
     val dim = Tables.nation(spark, dir).select(col("n_nationkey"), col("n_name"))
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "customer")
+    val st = Tables.stream(spark, dir, "customer")
       .join(broadcast(dim), col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey").as("ck"), col("n_name"),
         col("c_mktsegment").as("seg"))
@@ -3075,7 +2999,7 @@ object StreamQueries {
   def q217_stream_part_trend(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "lineitem")
+    val st = Tables.stream(spark, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_linenumber").cast("long").as("ln"),
         col("l_partkey").as("pk"),
         ((year(col("l_shipdate")) - 1995) * 12 + month(col("l_shipdate")) - 1)
@@ -3122,7 +3046,7 @@ object StreamQueries {
   def q218_stream_acf(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "orders")
+    val st = Tables.stream(spark, dir, "orders")
       .select(col("o_orderkey").as("ok"),
         datediff(to_date(col("o_orderdate")), lit("1970-01-01").cast("date"))
           .cast("long").as("epd"),
@@ -3158,7 +3082,7 @@ object StreamQueries {
   def q219_stream_trailing(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "orders")
+    val st = Tables.stream(spark, dir, "orders")
       .select(col("o_orderkey").as("ok"), col("o_custkey").as("ck"),
         datediff(to_date(col("o_orderdate")), lit("1995-01-01").cast("date"))
           .cast("long").as("epd"),
@@ -3209,7 +3133,7 @@ object StreamQueries {
   def q220_stream_rfm(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "orders")
+    val st = Tables.stream(spark, dir, "orders")
       .select(col("o_orderkey").as("ok"), col("o_custkey").as("ck"),
         datediff(to_date(col("o_orderdate")), lit("1970-01-01").cast("date"))
           .cast("long").as("epd"),
@@ -3252,7 +3176,7 @@ object StreamQueries {
   def q221_stream_seasonal(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "orders")
+    val st = Tables.stream(spark, dir, "orders")
       .select(col("o_orderkey").as("ok"),
         datediff(to_date(col("o_orderdate")), lit("1970-01-01").cast("date"))
           .cast("long").as("epd"),
@@ -3335,7 +3259,7 @@ object StreamQueries {
     import sp.implicits._
     val dim = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_nationkey"))
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "orders")
+    val st = Tables.stream(spark, dir, "orders")
       .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey").as("ok"), col("c_nationkey").as("nk"),
         (dec2(col("o_totalprice")) * 100).cast("long").as("c"))
@@ -3423,7 +3347,7 @@ object StreamQueries {
       project: DataFrame => DataFrame): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val base = graft.streaming.Pairing.tableStream(spark, dir, "lineitem")
+    val base = Tables.stream(spark, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_linenumber").cast("long").as("ln"),
         member.as("m"))
     // expiry mode (VERDICT r12 item 6): the shared orderkey-as-hours
@@ -3506,7 +3430,7 @@ object StreamQueries {
     // the key, which the projection's distinct absorbs — so unlike
     // the membership states, q226's output is expiry-safe even when
     // a key DOES reappear past its horizon.
-    val base = graft.streaming.Pairing.tableStream(spark, dir, "lineitem")
+    val base = Tables.stream(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber").cast("long").as("ln"),
         col("l_suppkey"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -3552,7 +3476,7 @@ object StreamQueries {
     import sp.implicits._
     val ord = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"))
-    val base = graft.streaming.Pairing.tableStream(spark, dir, "lineitem")
+    val base = Tables.stream(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber").cast("long").as("ln"),
         col("l_suppkey"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -3832,7 +3756,7 @@ object StreamQueries {
   def q235_stream_rollup(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "orders")
+    val st = Tables.stream(spark, dir, "orders")
       .select(col("o_orderkey").as("ok"), col("o_orderpriority").as("pri"),
         col("o_orderstatus").as("st"),
         graft.plans.Cents(col("o_totalprice")).as("c"))
@@ -3870,7 +3794,7 @@ object StreamQueries {
     import sp.implicits._
     val cust = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "orders")
+    val st = Tables.stream(spark, dir, "orders")
       .join(cust, col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey").as("ok"), col("c_mktsegment").as("seg"),
         col("o_orderpriority").as("pri"),
@@ -3906,7 +3830,7 @@ object StreamQueries {
   def q237_stream_grouping_sets(spark: SparkSession, dir: String): DataFrame = {
     val sp = spark
     import sp.implicits._
-    val st = graft.streaming.Pairing.tableStream(spark, dir, "lineitem")
+    val st = Tables.stream(spark, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_linenumber").cast("long").as("ln"),
         col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
         graft.plans.Cents(col("l_extendedprice")).as("c"))
@@ -3946,7 +3870,7 @@ object StreamQueries {
     val sp = spark
     import sp.implicits._
     val st = ReportQueries.bucketDiffRows(
-        graft.streaming.Pairing.tableStream(spark, dir, "lineitem"))
+        Tables.stream(spark, dir, "lineitem"))
       .select(col("okey").as("ok"), col("lineno").cast("long").as("ln"),
         col("bucket"), col("fp"), col("r"))
       .as[graft.streaming.Pairing.LiFp]
@@ -3986,7 +3910,7 @@ object StreamQueries {
     val sp = spark
     import sp.implicits._
     val st = TextQueries.dedupExactRows(
-        graft.streaming.Pairing.tableStream(spark, dir, "documents"))
+        Tables.stream(spark, dir, "documents"))
       .select(col("doc_id").as("id"), col("norm_key").as("k"))
       .as[graft.streaming.Pairing.DocKey]
     graft.streaming.Pairing.runStream[graft.streaming.Pairing.DocKey,
@@ -4022,7 +3946,7 @@ object StreamQueries {
     val sp = spark
     import sp.implicits._
     val st = TextQueries.trainSplitRows(
-        graft.streaming.Pairing.tableStream(spark, dir, "documents"))
+        Tables.stream(spark, dir, "documents"))
       .select(col("doc_id").as("id"), col("lang"), col("split"))
       .as[graft.streaming.Pairing.DocSplit]
     graft.streaming.Pairing.runStream[graft.streaming.Pairing.DocSplit,

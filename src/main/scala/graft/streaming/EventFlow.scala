@@ -92,17 +92,35 @@ final case class EventFlow(df: DataFrame) {
     * edge-sized) accumulate into GC pressure that inflates the
     * late-alphabet pairings 3–6× in-process while their isolated
     * medians sit at their floors. The one place graft starts a memory
-    * sink (Pairing.runStream included). Callers get a frame whose plan
-    * is a LogicalRDD — independent of the view name, safe to use
-    * lazily.
+    * sink (Pairing.runStream included); it names the sink itself, so
+    * no caller sees the name. Callers get a frame whose plan is a
+    * LogicalRDD — independent of the view, safe to use lazily.
+    *
+    * Stream width: stateful streaming allocates ONE state-store
+    * instance per shuffle partition per stateful operator, and every
+    * micro-batch pays a commit/maintenance round-trip on each of them.
+    * For the local gate (≤100k rows of state) 32 partitions is pure
+    * fixed overhead — the round-2 bench measured q61/q64 at 2.3×/2.6×
+    * for exactly this reason. The query starts under a small
+    * partition count (GRAFT_STREAM_SHUFFLE, default 5) and the session
+    * default is restored afterwards; Spark copies the session conf
+    * when a streaming query starts, so the width is fixed for the
+    * query's life. On a real cluster this knob is sized to executor
+    * cores × executors, not hard-coded.
     */
-  def toMemory(spark: SparkSession, name: String, outputMode: String): DataFrame = {
-    val q = df.writeStream
-      .format("memory").queryName(name)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def toMemory(spark: SparkSession, outputMode: String): DataFrame = {
+    val name = s"graft_mem_${EventFlow.sinkId.incrementAndGet()}"
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "5"))
+    try {
+      df.writeStream
+        .format("memory").queryName(name)
+        .outputMode(outputMode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    } finally spark.conf.set(key, prev)
     val out = spark.table(name).localCheckpoint(true)
     spark.catalog.dropTempView(name)
     out
@@ -135,32 +153,20 @@ final case class EventFlow(df: DataFrame) {
 
 object EventFlow {
 
+  private val sinkId = new java.util.concurrent.atomic.AtomicInteger(0)
+
   /** File-source flow over a parquet path (deva from_textfile's
     * tail-a-growing-source analogue; new files become new events).
     */
   def fromParquet(spark: SparkSession, path: String, schema: StructType): EventFlow =
     EventFlow(spark.readStream.schema(schema).parquet(path))
 
-  /** The test-data events table as a stream, ts normalized as in
-    * [[graft.Tables.events]], opened through [[Pairing.tableStream]].
-    * The gate corpus's events.parquet stores nanos-as-long ts, derived
-    * copies store real timestamps — nanosAsLong is set before the
-    * opener's first (probing) read, so its memoized schema matches
-    * per-call inference.
+  /** The test-data events table as a stream, opened and `ts`
+    * normalized by [[graft.Tables.stream]] exactly as the batch
+    * [[graft.Tables.events]] is.
     */
-  def fromEvents(spark: SparkSession, dir: String): EventFlow = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val st = Pairing.tableStream(spark, dir, "events")
-    EventFlow(st.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        st.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // timestamp[us] without tz — cast to TIMESTAMP, value-preserving
-        // under the session's pinned UTC (same rule as Tables.events)
-        st.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => st
-    })
-  }
+  def fromEvents(spark: SparkSession, dir: String): EventFlow =
+    EventFlow(graft.Tables.stream(spark, dir, "events"))
 
   /** Text-file tail source (deva from_textfile, sources.py:199). */
   def fromText(spark: SparkSession, dir: String): EventFlow =

@@ -1,17 +1,16 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** The batch≡stream pairing harness: the one place graft builds a
   * keyed-state streaming pairing. [[runStream]] holds the machinery —
-  * a small stream shuffle width, groupByKey + flatMapGroupsWithState
-  * with a canonical per-key replay order, optional event-time state
-  * expiry, and an AvailableNow append memory sink drained through
-  * [[EventFlow.toMemory]]. [[run]] (events) and [[runDocs]]
+  * groupByKey + flatMapGroupsWithState with a canonical per-key
+  * replay order, optional event-time state expiry, and an
+  * AvailableNow append memory sink drained, at the small stream
+  * width, through [[EventFlow.toMemory]]. [[run]] (events) and [[runDocs]]
   * (documents) are thin source adapters: each opens its table as a
   * typed stream, names its replay order, and delegates. A pairing is
   * then just its key, state type, fold step and final projection —
@@ -89,26 +88,8 @@ object Pairing {
   case class VecRow(vec_id: Long, embedding: Seq[Float])
   case class DocSplit(id: Long, lang: String, split: String)
 
-  private val runId = new AtomicInteger(0)
   private implicit val evEnc: Encoder[EvRow] = Encoders.product[EvRow]
   private implicit val docEnc: Encoder[DocRow] = Encoders.product[DocRow]
-
-  /** Stateful streaming allocates ONE state-store instance per shuffle
-    * partition per stateful operator, and every micro-batch pays a
-    * commit/maintenance round-trip on each of them. For the local gate
-    * (≤100k rows of state) 32 partitions is pure fixed overhead — the
-    * round-2 bench measured q61/q64 at 2.3×/2.6× for exactly this
-    * reason. Run the streaming plan under a small partition count and
-    * restore the session default afterwards; on a real cluster this
-    * knob is sized to executor cores × executors, not hard-coded
-    * (GRAFT_STREAM_SHUFFLE env overrides).
-    */
-  def withStreamShuffle[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "5"))
-    try body finally spark.conf.set(key, prev)
-  }
 
   /** Scoped state-store provider switch for the BIG-STATE pairings
     * (VERDICT r14 item 4), resolved by MEASUREMENT in r15. The r14
@@ -179,41 +160,6 @@ object Pairing {
       (implicit ek: Encoder[K], es: Encoder[S], eo: Encoder[O]): DataFrame =
     runStream[EvRow, K, S, O](spark, events(spark, dir), cols, eventOrder)(
       key)(init)(step)(project)
-
-  /** Open any parquet table of the test schema as a file STREAM —
-    * the one stream-table opener, [[EventFlow.fromEvents]] included.
-    * File stream sources need a directory, so the read shape follows
-    * what is on disk: a DIRECTORY of part files (Spark-written copies)
-    * is read as one; a single parquet FILE (the gate's test corpus),
-    * or no literal child at all (date-partitioned trees), scopes the
-    * parent dir by glob filter. Schema comes from a footer read;
-    * callers project/enrich/type the frame before handing it to
-    * [[runStream]].
-    */
-  def tableStream(spark: SparkSession, dir: String, table: String): DataFrame = {
-    // (isDir, schema) memo keyed by (dir, table) — r16: the footer
-    // probe + layout stat cost ~0.1 s per streaming query, repeated
-    // for the SAME immutable path metadata by every pairing in a gate
-    // pass (`perfbench/run.py --workload stream_backfill --trace 1`
-    // reports the per-pass streaming layers). Metadata only — no rows
-    // or results are memoized (same doctrine as Tables.schemaMemo).
-    val (isDir, schema) = streamSchemaMemo.computeIfAbsent((dir, table), { _ =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val d = fs.exists(p) && fs.getFileStatus(p).isDirectory
-      val s =
-        if (d) spark.read.parquet(p.toString).schema
-        else spark.read.option("pathGlobFilter", s"$table.parquet").parquet(dir).schema
-      (d, s)
-    })
-    if (isDir) spark.readStream.schema(schema).parquet(s"$dir/$table.parquet")
-    else spark.readStream.schema(schema)
-      .option("pathGlobFilter", s"$table.parquet").parquet(dir)
-  }
-
-  private val streamSchemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (Boolean, org.apache.spark.sql.types.StructType)]()
 
   /** Synthetic event time for fact rows under expiry mode: TPC-H fact
     * rows carry no ingestion timestamp, so the TTL clock derives one
@@ -301,7 +247,6 @@ object Pairing {
       (step: (K, S, Vector[R]) => (S, Vector[O]))
       (project: DataFrame => DataFrame)
       (implicit ek: Encoder[K], es: Encoder[S], eo: Encoder[O]): DataFrame = {
-    val name = s"pairing_mem_${runId.incrementAndGet()}"
     val timeoutConf =
       if (expireHorizonMs.isDefined) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
@@ -310,30 +255,28 @@ object Pairing {
     val expAcc = expireHorizonMs.map(_ => expiredFor(spark))
     def maybeBig[T](body: => T): T =
       if (bigState) withBigStateStore(spark)(body) else body
+    val out = stream.groupByKey(key)(ek)
+      .flatMapGroupsWithState[S, O](OutputMode.Append, timeoutConf) {
+        (k: K, it: Iterator[R], state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            expAcc.foreach(_.add(1L))
+            Iterator.empty
+          } else {
+            val ordered = it.toVector.sortBy(order)
+            val (s1, outs) = step(k, state.getOption.getOrElse(init), ordered)
+            state.update(s1)
+            expireHorizonMs.foreach(h =>
+              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + h))
+            outs.iterator
+          }
+      }(es, eo)
     // the drained sink is an eagerly checkpointed LogicalRDD: a
     // projection that SELF-JOINS it (q188's cohort join, q194's
     // pair/audit joins) would trip Spark's conflicting-reference
     // resolution on MemoryPlan attributes, which don't dedup like
     // relation outputs
-    val drained = maybeBig { withStreamShuffle(spark) {
-      val out = stream.groupByKey(key)(ek)
-        .flatMapGroupsWithState[S, O](OutputMode.Append, timeoutConf) {
-          (k: K, it: Iterator[R], state: GroupState[S]) =>
-            if (state.hasTimedOut) {
-              state.remove()
-              expAcc.foreach(_.add(1L))
-              Iterator.empty
-            } else {
-              val ordered = it.toVector.sortBy(order)
-              val (s1, outs) = step(k, state.getOption.getOrElse(init), ordered)
-              state.update(s1)
-              expireHorizonMs.foreach(h =>
-                state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + h))
-              outs.iterator
-            }
-        }(es, eo)
-      EventFlow(out.toDF(cols: _*)).toMemory(spark, name, "append")
-    } }
+    val drained = maybeBig { EventFlow(out.toDF(cols: _*)).toMemory(spark, "append") }
     project(drained)
   }
 
@@ -348,7 +291,7 @@ object Pairing {
       (project: DataFrame => DataFrame)
       (implicit ek: Encoder[K], es: Encoder[S], eo: Encoder[O]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val ds = tableStream(spark, dir, "documents")
+    val ds = graft.Tables.stream(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars").cast("long").as("n_chars"))
       .as[DocRow]
     runStream[DocRow, K, S, O](spark, ds, cols, d => (d.doc_id, 0L))(

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
-import graft.{Sessions, SparkEntry}
+import graft.{Bench, Sessions, SparkEntry}
 
 /** Scratch investigator (not part of the gate; edited ad-hoc per
   * investigation). Currently: sweep the heavy gate queries for
@@ -98,11 +98,11 @@ object Probe {
     })
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      try fn(spark, dir).count() catch { case e: Throwable => println(s"[probe] $name warmup failed: $e") }
+      try Bench.materialize(fn(spark, dir)) catch { case e: Throwable => println(s"[probe] $name warmup failed: $e") }
       spark.catalog.clearCache()
       stages.clear()
       val t0 = System.nanoTime()
-      try fn(spark, dir).count() catch { case _: Throwable => }
+      try Bench.materialize(fn(spark, dir)) catch { case _: Throwable => }
       val sec = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
       Thread.sleep(300)

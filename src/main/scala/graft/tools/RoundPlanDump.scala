@@ -1,9 +1,10 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry}
+import graft.{Bench, Sessions, SparkEntry}
 
-/** Dump every action's executed plan while one gate query runs —
-  * the debugging view behind PlanAuditSpec's round-plan audit.
+/** Dump every action's executed plan while one gate query computes
+  * its full result ([[Bench.materialize]]) — the debugging view behind
+  * PlanAuditSpec's round-plan audit.
   *
   *   sbt "runMain graft.tools.RoundPlanDump q249_kcore [sfDir] [grep]"
   */
@@ -22,7 +23,7 @@ object RoundPlanDump {
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
-    SparkEntry.queries(name)(spark, dir).count()
+    Bench.materialize(SparkEntry.queries(name)(spark, dir))
     Thread.sleep(3000)
     import scala.jdk.CollectionConverters._
     plans.asScala.zipWithIndex.foreach { case ((f, p), i) =>

@@ -404,7 +404,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // guide §2.2) and each round is an eager localCheckpoint — the
     // r10–r15 per-round count/width-cap bookkeeping measured 2–4× the
     // traversal itself and its cached-union plan reached 24k explain
-    // lines by round 4 at sf0.1 (KHopVariants A/B, PLANS r16). Pin the
+    // lines by round 4 at sf0.1 (the r16 A/B in PLANS.md). Pin the
     // two properties that replaced it: tiny round frames must
     // materialize NARROW (near-empty-task spray stays dead under the
     // shipped AQE session), and the result plan must stay a flat

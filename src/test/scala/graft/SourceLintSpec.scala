@@ -87,7 +87,9 @@ class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     // EventFlow.toMemory — one copy of the fold, the sink start, the
     // AvailableNow trigger and the drain, so a cut to the per-pairing
     // floor is made once
-    val re = """\.writeStream\b|\bflatMapGroupsWithState\b""".r
+    // EventFlow.toMemory also names the sink and sets the stream
+    // width, so StreamQueries holds no sink name or width scope
+    val re = """\.writeStream\b|\bflatMapGroupsWithState\b|\bwithStreamShuffle\b|_mem_""".r
     val hits = Files.readAllLines(
         Paths.get("src/main/scala/graft/queries/StreamQueries.scala"))
       .asScala.zipWithIndex.collect {
@@ -98,6 +100,17 @@ class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(hits.isEmpty,
       "hand-rolled stream pipeline in StreamQueries (use Pairing.run/runStream " +
         "or EventFlow.toMemory):\n" + hits.mkString("\n"))
+  }
+
+  test("events.ts is normalized only in Tables") {
+    // batch and stream read events through Tables, so the nanos-as-long
+    // read and its truncation to microseconds live in one place — a
+    // second copy could drift and make a pairing read other
+    // timestamps than its batch twin
+    val re = """timestamp_micros\(ts div 1000\)|nanosAsLong""".r
+    val hits = offenders(re).filterNot(_.startsWith("src/main/scala/graft/Tables.scala:"))
+    assert(hits.isEmpty,
+      "events.ts normalization outside Tables.scala:\n" + hits.mkString("\n"))
   }
 
   test("oracle SQL never floors an integral decode through DOUBLE") {

@@ -233,17 +233,47 @@ class StreamingSpec extends AnyFunSuite {
     Tables.events(spark, dir).repartition(3).write.parquet(s"$copy/events.parquet")
     val parts = new java.io.File(s"$copy/events.parquet").list().count(_.endsWith(".parquet"))
     assert(parts == 3, s"expected 3 part files, got $parts")
-    def rows(d: String, name: String) = {
+    def rows(d: String) = {
       val flow = EventFlow.fromEvents(spark, d)
-      (flow.df.schema, flow.toMemory(spark, name, "append").collect().map(_.toString).sorted.toSeq)
+      (flow.df.schema, flow.toMemory(spark, "append").collect().map(_.toString).sorted.toSeq)
     }
-    val (fileSchema, fromFile) = rows(dir, "events_layout_file")
-    val (dirSchema, fromDir) = rows(copy, "events_layout_dir")
+    val (fileSchema, fromFile) = rows(dir)
+    val (dirSchema, fromDir) = rows(copy)
     assert(fromFile.nonEmpty, "the single-file events read no rows")
     assert(dirSchema == fileSchema, s"schemas differ:\n$dirSchema\n$fileSchema")
     assert(fromDir == fromFile,
       s"${fromDir.size} vs ${fromFile.size} rows; " +
         s"first diff ${fromDir.zip(fromFile).find(p => p._1 != p._2)}")
+  }
+
+  test("Tables.stream opens every table with the batch loader's schema") {
+    // a pairing is only comparable to its batch twin if both read the
+    // same columns with the same types — events' ts normalization
+    // included
+    val dir = "/root/testdata/sf0.001"
+    Tables.names.foreach { t =>
+      val st = Tables.stream(spark, dir, t)
+      assert(st.isStreaming, s"$t: not a stream")
+      assert(st.schema == Tables(spark, dir, t).schema,
+        s"$t: stream and batch schemas differ:\n${st.schema}\n${Tables(spark, dir, t).schema}")
+    }
+    assert(Tables.stream(spark, dir, "events").schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+  }
+
+  test("view-projected pairings q103, q170 and q172 leave no temp view behind") {
+    // a registered view pins its drained frame in the session catalog
+    // for the life of the process — the leak toMemory's own
+    // dropTempView exists to stop
+    val dir = "/root/testdata/sf0.001"
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = views
+    val q = graft.queries.StreamQueries
+    Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+        q.q103_stream_drift, q.q170_stream_quantiles, q.q172_stream_transitions)
+      .foreach(f => assert(f(spark, dir).collect().nonEmpty))
+    val leaked = views -- before
+    assert(leaked.isEmpty, s"temp views left behind: $leaked")
   }
 
   test("rate source produces rows (deva from_periodic)") {
