@@ -14,10 +14,63 @@ object Bench {
   def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** The core count `SPARK_GRAFT_CPUS` names (4 when unset): the
+    * width of the session Bench, Verify and the tools build. */
+  private[graft] def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** 1-minute loadavg — the box-contention witness recorded around
+    * every rep. -1 when /proc is unreadable (non-Linux dev box). */
+  private[graft] def loadavg(): Double =
+    try new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
+      .split(" ")(0).toDouble
+    catch { case _: Throwable => -1.0 }
+
+  /** Per-query record: every rep's wall time plus the 1-min loadavg
+    * sampled before and after it (times.length + 1 samples — each
+    * boundary shared by adjacent reps). A spread-RETRIED query
+    * (`retried`) carries one more rep whose bracket is its own
+    * (pre, post) pair — the retry runs at end-of-pass, so the
+    * original pass's closing sample would be a stale lie for it:
+    * times.length + 2 samples, the last two bracketing the retry. */
+  case class QRun(name: String, times: Vector[Double],
+      loads: Vector[Double], anyFailed: Boolean,
+      retried: Boolean = false) {
+    def best: Double = if (anyFailed || times.isEmpty) -1.0 else times.min
+    def spread: Double =
+      if (times.isEmpty || times.min <= 0) 1.0 else times.max / times.min
+  }
+
+  /** The one timing loop (Bench, tools.Inspect, tools.ScaleSmoke):
+    * `n` reps of one query, each [[materialize]]d. A failed rep marks
+    * the run failed, so its [[QRun.best]] reads -1, never the
+    * time-to-throw.
+    */
+  def runOne(spark: SparkSession, name: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+      dir: String, n: Int): QRun = {
+    var times = Vector.empty[Double]
+    var loads = Vector(loadavg())
+    var fail = false
+    for (_ <- 1 to n) {
+      val t0 = System.nanoTime()
+      val ok = try { materialize(fn(spark, dir)); true }
+      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
+      times :+= (System.nanoTime() - t0) / 1e9
+      loads :+= loadavg()
+      // drop any persisted intermediates so cached partitions from one
+      // query/rep can't distort the storage/execution memory of the
+      // next (outside the timed window)
+      spark.catalog.clearCache()
+      if (!ok) fail = true
+    }
+    QRun(name, times, loads, fail)
+  }
+
   def main(args: Array[String]): Unit = {
     val wallStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = session(cpus)
     // single-run timings swing ±50% on this harness (measured across
     // rounds) and the driver box is routinely contended by OTHER
     // processes: BENCH_r15's per-query map recorded 8–40× spikes that
@@ -33,14 +86,6 @@ object Bench {
     // and leave the gate without a metric line
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS")
       .flatMap(_.trim.toIntOption).getOrElse(3).max(1)
-
-    /** 1-minute loadavg — the box-contention witness recorded around
-      * every rep. -1 when /proc is unreadable (non-Linux dev box). */
-    def loadavg(): Double =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
 
     /** Cumulative CPU steal seconds from /proc/stat (field 8 of the
       * aggregate cpu line, jiffies at 100 Hz) — the hypervisor-
@@ -70,13 +115,6 @@ object Bench {
           catch { case _: Throwable => }
         }
 
-    /** One full gate pass at `dir`: per-query MIN of `reps` runs.
-      * A failed query reports -1, never its time-to-throw (which would
-      * make breakage look like a speedup); any failed rep marks the
-      * query failed — a flaky query must not hide behind its passing
-      * reps.
-      */
-
     // the streaming pairings are micro-batch-machinery-dominated and
     // stable across reps (r13/r14 artifacts: per-query spread well
     // under the batch queries' contention noise), while they carry
@@ -89,45 +127,15 @@ object Bench {
     def repsOf(name: String): Int =
       if (streamingKeys(name)) reps.min(2) else reps
 
-    /** Per-query record: every rep's wall time plus the 1-min loadavg
-      * sampled before and after it (times.length + 1 samples — each
-      * boundary shared by adjacent reps). A spread-RETRIED query
-      * (`retried`) carries one more rep whose bracket is its own
-      * (pre, post) pair — the retry runs at end-of-pass, so the
-      * original pass's closing sample would be a stale lie for it:
-      * times.length + 2 samples, the last two bracketing the retry. */
-    case class QRun(name: String, times: Vector[Double],
-        loads: Vector[Double], anyFailed: Boolean,
-        retried: Boolean = false) {
-      def best: Double = if (anyFailed || times.isEmpty) -1.0 else times.min
-      def spread: Double =
-        if (times.isEmpty || times.min <= 0) 1.0 else times.max / times.min
-    }
-
-    def runOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String, n: Int): QRun = {
-      var times = Vector.empty[Double]
-      var loads = Vector(loadavg())
-      var fail = false
-      for (_ <- 1 to n) {
-        val t0 = System.nanoTime()
-        val ok = try { materialize(fn(spark, dir)); true }
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-        times :+= (System.nanoTime() - t0) / 1e9
-        loads :+= loadavg()
-        // drop any persisted intermediates so cached partitions from one
-        // query/rep can't distort the storage/execution memory of the
-        // next (outside the timed window)
-        spark.catalog.clearCache()
-        if (!ok) fail = true
-      }
-      QRun(name, times, loads, fail)
-    }
-
+    /** One full gate pass at `dir`: per-query MIN of `reps` runs.
+      * A failed query reports -1, never its time-to-throw (which would
+      * make breakage look like a speedup); any failed rep marks the
+      * query failed — a flaky query must not hide behind its passing
+      * reps.
+      */
     def runSf(dir: String, repCap: Int = Int.MaxValue): Seq[QRun] = {
       val first = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        runOne(name, fn, dir, repsOf(name).min(repCap))
+        runOne(spark, name, fn, dir, repsOf(name).min(repCap))
       }
       // spread-triggered retry (VERDICT r15 item 1c): a ≥3× rep spread
       // means at least one draw was contended — one extra rep at
@@ -137,7 +145,7 @@ object Bench {
       if (repCap > 1) first.map { q =>
         if (!q.anyFailed && q.times.nonEmpty && q.times.min >= 0.5 &&
             q.spread > 3.0) {
-          val extra = runOne(q.name, SparkEntry.queries(q.name), dir, 1)
+          val extra = runOne(spark, q.name, SparkEntry.queries(q.name), dir, 1)
           QRun(q.name, q.times ++ extra.times, q.loads ++ extra.loads,
             q.anyFailed || extra.anyFailed, retried = true)
         } else q

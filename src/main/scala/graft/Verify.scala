@@ -14,7 +14,7 @@ object Verify {
     // the injected optimizer rules are registered (r12): the gate then
     // verifies the REWRITTEN plans against DuckDB — the strongest proof
     // the rules are value-identical, and the same session Bench measures
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = session(Bench.cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** SparkSessionExtensions wiring: makes graft's custom expressions
   * first-class for SQL users (`SELECT graft_hash60(col)`) and injects
@@ -29,144 +29,42 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // collect_list(struct)), x -> x.f) — fuses to the codegen'd
     // SortedTrail kernel (both steps were interpreter-bound)
     ext.injectOptimizerRule(_ => RewriteSortedTrail)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_hash60"),
-      new ExpressionInfo(classOf[Hash60].getName, "graft_hash60"),
-      (children: Seq[Expression]) => {
-        if (children.length != 1)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_hash60`",
-              "expectedNum" -> "1",
-              "actualNum" -> children.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"),
-            cause = None)
-        Hash60(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_array_dot"),
-      new ExpressionInfo(classOf[ArrayDot].getName, "graft_array_dot"),
-      (children: Seq[Expression]) => {
-        if (children.length != 2)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_array_dot`",
-              "expectedNum" -> "2",
-              "actualNum" -> children.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"),
-            cause = None)
-        ArrayDot(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_rolling_hash"),
-      new ExpressionInfo(classOf[RollingWindowHash].getName, "graft_rolling_hash"),
-      (children: Seq[Expression]) => {
-        if (children.length != 2)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_rolling_hash`",
-              "expectedNum" -> "2",
-              "actualNum" -> children.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"),
-            cause = None)
-        val w = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_rolling_hash window length must be an integer literal, got $other")
-        }
-        RollingWindowHash(children.head, w)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[Shingles].getName, "graft_shingles"),
-      (children: Seq[Expression]) => {
-        if (children.length != 2)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_shingles`",
-              "expectedNum" -> "2",
-              "actualNum" -> children.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"),
-            cause = None)
-        val n = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_shingles width must be an integer literal, got $other")
-        }
-        Shingles(children.head, n)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cents"),
-      new ExpressionInfo(classOf[Cents].getName, "graft_cents"),
-      (children: Seq[Expression]) => {
-        if (children.length != 1)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_cents`",
-              "expectedNum" -> "1",
-              "actualNum" -> children.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"),
-            cause = None)
-        Cents(children.head,
-          org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_jaro_winkler_q4"),
-      new ExpressionInfo(classOf[JaroWinklerQ4].getName, "graft_jaro_winkler_q4"),
-      (children: Seq[Expression]) => {
-        if (children.length != 2)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_jaro_winkler_q4`",
-              "expectedNum" -> "2",
-              "actualNum" -> children.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"),
-            cause = None)
-        JaroWinklerQ4(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_sorted_trail"),
-      new ExpressionInfo(classOf[SortedTrail].getName, "graft_sorted_trail"),
-      (children: Seq[Expression]) => {
-        if (children.length != 2)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_sorted_trail`",
-              "expectedNum" -> "2",
-              "actualNum" -> children.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"),
-            cause = None)
-        val idx = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_sorted_trail field ordinal must be an integer literal, got $other")
-        }
-        SortedTrail(children.head, idx)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_deflate_size"),
-      new ExpressionInfo(classOf[DeflateSize].getName, "graft_deflate_size"),
-      (children: Seq[Expression]) => {
-        if (children.length != 1)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "`graft_deflate_size`",
-              "expectedNum" -> "1",
-              "actualNum" -> children.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"),
-            cause = None)
-        DeflateSize(children.head)
-      }))
+    // the SQL functions: a wrong arity fails analysis the way a
+    // builtin's does
+    def fn(name: String, cls: Class[_], arity: Int)(build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          if (children.length != arity)
+            throw new org.apache.spark.sql.AnalysisException(
+              errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+              messageParameters = Map(
+                "functionName" -> s"`$name`",
+                "expectedNum" -> arity.toString,
+                "actualNum" -> children.length.toString,
+                "docroot" -> "https://spark.apache.org/docs/latest"),
+              cause = None)
+          build(children)
+        }))
+    fn("graft_hash60", classOf[Hash60], 1)(c => Hash60(c.head))
+    fn("graft_array_dot", classOf[ArrayDot], 2)(c => ArrayDot(c.head, c(1)))
+    fn("graft_rolling_hash", classOf[RollingWindowHash], 2)(c =>
+      RollingWindowHash(c.head, intLiteral("graft_rolling_hash window length", c(1))))
+    fn("graft_shingles", classOf[Shingles], 2)(c =>
+      Shingles(c.head, intLiteral("graft_shingles width", c(1))))
+    fn("graft_cents", classOf[Cents], 1)(c =>
+      Cents(c.head, org.apache.spark.sql.internal.SQLConf.get.ansiEnabled))
+    fn("graft_jaro_winkler_q4", classOf[JaroWinklerQ4], 2)(c => JaroWinklerQ4(c.head, c(1)))
+    fn("graft_sorted_trail", classOf[SortedTrail], 2)(c =>
+      SortedTrail(c.head, intLiteral("graft_sorted_trail field ordinal", c(1))))
+    fn("graft_deflate_size", classOf[DeflateSize], 1)(c => DeflateSize(c.head))
+  }
+
+  /** The width/ordinal argument of a SQL call, which the kernel fixes
+    * at plan time: an integer literal. */
+  private def intLiteral(what: String, e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
+    case Literal(v: Long, _) => v.toInt
+    case other => throw new IllegalArgumentException(
+      s"$what must be an integer literal, got $other")
   }
 }

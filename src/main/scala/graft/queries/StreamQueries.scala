@@ -3313,17 +3313,11 @@ object StreamQueries {
     * actually firing. EXPIRY ON is the gate default (VERDICT r13
     * item 6): the scale-safe configuration — per-order state removed
     * once the watermark passes a quiet order's deadline — is the
-    * certified configuration, not a spec-only variant.
-    * GRAFT_PAIRING_TTL overrides: "off" disables (the pre-r14
-    * behavior, for A/B-ing the TTL machinery's cost), any long is a
-    * horizon in ms (a deployment sizes this to its ingest lag).
+    * certified configuration, not a spec-only variant. The
+    * never-expire variant stays reachable as `orderMembers(…, None)`
+    * (q224_without_expiry).
     */
-  private[queries] val orderTtlMs: Option[Long] =
-    sys.env.get("GRAFT_PAIRING_TTL") match {
-      case Some("off") => None
-      case Some(ms) => Some(ms.trim.toLong)
-      case None => Some(7L * 24 * 3600 * 1000)
-    }
+  private[queries] val orderTtlMs: Option[Long] = Some(7L * 24 * 3600 * 1000)
 
   /** Shared prelude for the per-order membership pairings (#44/#45
     * and the #47–#50 basket/graph family): pairs and edges cannot
@@ -3377,6 +3371,49 @@ object StreamQueries {
       }
   }
 
+  /** Shared prelude for the customer↔supplier edge pairings (q226,
+    * q273): each line item resolves its customer through a
+    * stream-static join to ORDERS (fact-sized, not broadcast — the
+    * q215 discipline), then keys by the encoded (customer, supplier)
+    * EDGE with one long of presence state. The projection receives
+    * the distinct directed edge frame (a, b) and replays the batch
+    * tail verbatim.
+    *
+    * Expiry-on ([[orderTtlMs]]), and expiry-safe even when a key DOES
+    * reappear past its horizon: the re-observed edge re-inits to 0
+    * and re-emits, which the distinct absorbs.
+    */
+  private[queries] def orderEdges(spark: SparkSession, dir: String)(
+      project: DataFrame => DataFrame): DataFrame = {
+    val sp = spark
+    import sp.implicits._
+    val ord = Tables.orders(spark, dir)
+      .select(col("o_orderkey"), col("o_custkey"))
+    val st = Tables.stream(spark, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_linenumber").cast("long").as("ln"),
+        col("l_suppkey"))
+      .join(ord, col("l_orderkey") === col("o_orderkey"))
+      .select(col("l_orderkey").as("ok"), col("ln"),
+        (col("o_custkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b"))
+      // +1 epoch-tie guard + orderkey scale ceiling: documented at
+      // the shared Pairing.orderkeyEventTime
+      .withColumn("evt", graft.streaming.Pairing.orderkeyEventTime(col("ok")))
+      .withWatermark("evt", "0 milliseconds")
+      .as[graft.streaming.Pairing.LiEdge]
+    graft.streaming.Pairing.runStream[graft.streaming.Pairing.LiEdge,
+        (Long, Long), Long, (Long, Long)](
+      spark, st, Seq("a", "b"), r => (r.ok, r.ln), orderTtlMs,
+      // edge-count keys (~400k at ×10) — marked big-state (see
+      // Pairing.withBigStateStore for the measured provider choice)
+      bigState = true)(
+      r => (r.a, r.b))(0L) { (k, s0, ordered) =>
+        (s0 + ordered.size,
+          if (ordered.isEmpty) Vector.empty else Vector((k._1, k._2)))
+      } { t =>
+        project(t.select(col("a"), col("b")).distinct())
+      }
+  }
+
   /** q224 with expiry DISABLED — spec-only (PairingLifecycleSpec):
     * since r14 the gate entry runs expiry-on by default, so the
     * bit-parity proof compares it against this never-expire variant.
@@ -3420,41 +3457,8 @@ object StreamQueries {
     * decq-quantized rounds verbatim over the compacted edge set
     * (shared pagerankIterFrom, shared oracle).
     */
-  def q226_stream_pagerank(spark: SparkSession, dir: String): DataFrame = {
-    val sp = spark
-    import sp.implicits._
-    val ord = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-    // expiry-on (r14 default for the order/edge-keyed family): an
-    // edge re-observed after its horizon re-inits to 0 and re-emits
-    // the key, which the projection's distinct absorbs — so unlike
-    // the membership states, q226's output is expiry-safe even when
-    // a key DOES reappear past its horizon.
-    val base = Tables.stream(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber").cast("long").as("ln"),
-        col("l_suppkey"))
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .select(col("l_orderkey").as("ok"), col("ln"),
-        (col("o_custkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b"))
-    val st = orderTtlMs.fold(base)(_ =>
-        // +1 epoch-tie guard + orderkey scale ceiling: documented at
-        // the shared Pairing.orderkeyEventTime
-        base.withColumn("evt", graft.streaming.Pairing.orderkeyEventTime(col("ok")))
-          .withWatermark("evt", "0 milliseconds"))
-      .as[graft.streaming.Pairing.LiEdge]
-    graft.streaming.Pairing.runStream[graft.streaming.Pairing.LiEdge,
-        (Long, Long), Long, (Long, Long)](
-      spark, st, Seq("a", "b"), r => (r.ok, r.ln), orderTtlMs,
-      // edge-count keys (~400k at ×10) — marked big-state (see
-      // Pairing.withBigStateStore for the measured provider choice)
-      bigState = true)(
-      r => (r.a, r.b))(0L) { (k, s0, ordered) =>
-        (s0 + ordered.size,
-          if (ordered.isEmpty) Vector.empty else Vector((k._1, k._2)))
-      } { t =>
-        AnalyticsQueries.pagerankIterFrom(t.select(col("a"), col("b")).distinct())
-      }
-  }
+  def q226_stream_pagerank(spark: SparkSession, dir: String): DataFrame =
+    orderEdges(spark, dir)(AnalyticsQueries.pagerankIterFrom)
 
   /** Same oracle as the batch multi-iteration PageRank — the point. */
   val q226_stream_pagerank_sql: String = AnalyticsQueries.q189_pagerank_iter_sql
@@ -3471,36 +3475,8 @@ object StreamQueries {
     * re-observed edge re-inits and re-emits, which the projection's
     * distinct absorbs.
     */
-  def q273_stream_hits(spark: SparkSession, dir: String): DataFrame = {
-    val sp = spark
-    import sp.implicits._
-    val ord = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-    val base = Tables.stream(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber").cast("long").as("ln"),
-        col("l_suppkey"))
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .select(col("l_orderkey").as("ok"), col("ln"),
-        (col("o_custkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b"))
-    val st = orderTtlMs.fold(base)(_ =>
-        // +1 epoch-tie guard + orderkey scale ceiling: documented at
-        // the shared Pairing.orderkeyEventTime
-        base.withColumn("evt", graft.streaming.Pairing.orderkeyEventTime(col("ok")))
-          .withWatermark("evt", "0 milliseconds"))
-      .as[graft.streaming.Pairing.LiEdge]
-    graft.streaming.Pairing.runStream[graft.streaming.Pairing.LiEdge,
-        (Long, Long), Long, (Long, Long)](
-      spark, st, Seq("a", "b"), r => (r.ok, r.ln), orderTtlMs,
-      // edge-count keys (~400k at ×10) — marked big-state (see
-      // Pairing.withBigStateStore for the measured provider choice)
-      bigState = true)(
-      r => (r.a, r.b))(0L) { (k, s0, ordered) =>
-        (s0 + ordered.size,
-          if (ordered.isEmpty) Vector.empty else Vector((k._1, k._2)))
-      } { t =>
-        AnalyticsQueries.hitsFrom(t.select(col("a"), col("b")).distinct())
-      }
-  }
+  def q273_stream_hits(spark: SparkSession, dir: String): DataFrame =
+    orderEdges(spark, dir)(AnalyticsQueries.hitsFrom)
 
   /** Same oracle as the batch HITS — the point. */
   val q273_stream_hits_sql: String = AnalyticsQueries.q272_hits_sql

@@ -1,13 +1,11 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
-import graft.{Bench, Sessions, SparkEntry}
+import graft.Bench
 
-/** Scratch investigator (not part of the gate; edited ad-hoc per
-  * investigation). Currently: sweep the heavy gate queries for
-  * serialized stages (tasks ≤ 2 with non-trivial wall time) — the
-  * AQE byte-coalescing failure mode found in q127.
+/** The render canary, outside the gate:
+  *
+  *   sbt "runMain graft.tools.Probe"
   */
 object Probe {
 
@@ -20,9 +18,9 @@ object Probe {
     * green on the replica for two consecutive rounds, deleted r15).
     * That fact lives in SURVEY §4. If the driver environment ever
     * upgrades its oracle build, the fact goes stale SILENTLY — so
-    * this canary stays, data-free, OUTSIDE the gate, behind
-    * GRAFT_RENDER_CANARY=1 (or a `canary` arg). Run it only when a
-    * CORRECTNESS artifact shows unexplained decimal-class reds: it
+    * this canary stays, data-free, OUTSIDE the gate, as this tool's
+    * `main`. Run it only when a CORRECTNESS artifact shows
+    * unexplained decimal-class reds: it
     * prints the Spark-computed frame plus the exact DuckDB SQL to
     * run by hand; value-identical output means the divergence is
     * gone and the SURVEY §4 paragraph should be retired.
@@ -75,43 +73,8 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.contains("canary") || sys.env.get("GRAFT_RENDER_CANARY").contains("1")) {
-      val sp = Sessions.local(cores = 2, shufflePartitions = 2)
-      sp.sparkContext.setLogLevel("ERROR")
-      renderCanary(sp); sp.stop(); return
-    }
-    val dir = args.find(_.startsWith("/")).getOrElse("/root/testdata/sf0.1")
-    val only = args.find(_.startsWith("only=")).map(_.drop(5).split(',').toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(_.contains("stream")) // micro-batch jobs have their own stage story
-      .filter(n => only.forall(_.contains(n)))
-    val spark = Sessions.local(cores = 32, shufflePartitions = 32)
+    val spark = Bench.session(Bench.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val stages = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Int, String)]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val wall = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
-        stages += ((si.stageId, wall, si.taskMetrics.executorRunTime, si.numTasks,
-          si.rddInfos.map(r => r.scope.map(_.name).getOrElse("?")).distinct.mkString(",").take(70)))
-      }
-    })
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      try Bench.materialize(fn(spark, dir)) catch { case e: Throwable => println(s"[probe] $name warmup failed: $e") }
-      spark.catalog.clearCache()
-      stages.clear()
-      val t0 = System.nanoTime()
-      try Bench.materialize(fn(spark, dir)) catch { case _: Throwable => }
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      Thread.sleep(300)
-      val serial = stages.filter(s => s._4 <= 2 && s._2 > 500).sortBy(-_._2)
-      println(f"[probe] $name%-24s ${sec}%6.2f s; serial stages: ${serial.size}")
-      serial.take(4).foreach { case (id, wall, run, tasks, scopes) =>
-        println(f"[probe]    stage $id%4d wall=${wall / 1e3}%5.2f tasks=$tasks%2d $scopes")
-      }
-    }
-    spark.stop()
+    try renderCanary(spark) finally spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Sessions, SparkEntry, Tables}
+import graft.{Bench, SparkEntry, Tables}
 import graft.operators.VectorIndex
 import graft.sources.Topic
 import graft.streaming.Heartbeat
@@ -32,7 +32,7 @@ object ScaleSmoke {
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val out = if (args.length > 2) args(2) else "/tmp/graft_scale"
     val skipWrite = args.contains("skipwrite")
-    val spark = Sessions.local(cores = 32, shufflePartitions = 64)
+    val spark = Bench.session(Bench.cpus)
 
     val span = 10_000_000L
     val specs: Seq[(String, Map[String, Long])] = Seq(
@@ -54,8 +54,7 @@ object ScaleSmoke {
     }
 
     // absorb JVM/codegen/parquet warmup outside the measurements
-    try SparkEntry.queries("q01_agg")(spark, out).count()
-    catch { case _: Throwable => }
+    Bench.runOne(spark, "q01_agg", SparkEntry.queries("q01_agg"), out, 1)
 
     val queries = Seq(
       "q01_agg", "q05_join3", "q06_join5", "q16_timed_window",
@@ -327,19 +326,19 @@ object ScaleSmoke {
         s"unknown smoke queries ${unknown.mkString(",")} — known: ${(queries ++ extras).mkString(",")}")
     }
     val selected = only.fold(queries)(s => queries.filter(s.contains))
+    // the shared timing loop: each query computes its full result, and
+    // clears the cache after, so ×N-sized persisted frames don't pile up;
+    // a failed query reads -1
     val times = selected.map { name =>
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, out).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // ×N-sized persisted frames must not accumulate
-      println(f"[scale] $name%-24s $sec%8.2f s  ($n rows)")
+      val sec = Bench.runOne(spark, name, SparkEntry.queries(name), out, 1).best
+      println(f"[scale] $name%-24s $sec%8.2f s")
       name -> sec
     } ++
       (if (only.forall(_.contains("vidx"))) smokeVectorIndex(spark, out, factor) else Nil) ++
       (if (only.forall(_.contains("heartbeat"))) smokeHeartbeat(spark, factor) else Nil) ++
       (if (only.forall(_.contains("sidx"))) smokeSearchIndex(spark, out, factor) else Nil)
     val qs = times.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val line = s"""{"metric":"scale_smoke_total","value":${times.map(_._2).sum},"unit":"sec","factor":$factor,"queries":$qs}"""
+    val line = s"""{"metric":"scale_smoke_total","value":${times.map(_._2).filter(_ >= 0).sum},"unit":"sec","failed":${times.count(_._2 < 0)},"factor":$factor,"queries":$qs}"""
     println(line)
     // driver-adjacent artifact (VERDICT r9 item 5): the per-round
     // scale regression check should be a mechanical diff of this file,

@@ -29,6 +29,11 @@ import graft.Sessions
   * Prints ONE json line: {"metric":"state_scale","keys":K,
   * "provider":p,"files":F,"sec":S}. Run both providers at ascending
   * K (e.g. 2M, 10M, 30M) and record the curve in SCALE_r16/PLANS.
+  *
+  * The one tool that does not build Bench's `SPARK_GRAFT_CPUS`-wide
+  * session: it keeps 32 cores and 32 state partitions, the width at
+  * which SCALE_r16 measured the RocksDB crossover, so new runs stay
+  * comparable with that curve.
   */
 object StateScale {
 

@@ -38,7 +38,7 @@ import org.apache.spark.sql.types.{LongType, StructType}
 object TopicIpc {
   def main(args: Array[String]): Unit = {
     val role = args(0)
-    val spark = graft.Sessions.local(cores = 2, shufflePartitions = 2)
+    val spark = graft.Bench.session(graft.Bench.cpus)
     val schema = new StructType().add("id", LongType).add("batch", LongType)
     role match {
       case "publisher" =>

@@ -46,16 +46,7 @@ class DppSpec extends AnyFunSuite {
       s"expected a dynamicpruning subquery in the fact scan:\n$phys")
 
     // measure what is actually read
-    def recordsRead(q: => Long): Long = {
-      val rec = new java.util.concurrent.atomic.AtomicLong(0L)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null) rec.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { q; Thread.sleep(1000) } finally spark.sparkContext.removeSparkListener(l)
-      rec.get
-    }
+    def recordsRead(q: => Long): Long = Profile.during(spark)(q)._2.recordsRead
     val total = fact.count()
     val expected = joined.count() // rows on the 3 wanted days
     val read = recordsRead(joined.count())

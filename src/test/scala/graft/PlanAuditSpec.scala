@@ -24,19 +24,9 @@ class PlanAuditSpec extends AnyFunSuite {
     // scan (the round-8 q104 failure mode) moves these counts.
     val nDocs = graft.Tables.documents(spark, dir).count()
     def corpusPasses(q: String): Long = {
-      val rec = new java.util.concurrent.atomic.AtomicLong(0L)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null) rec.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        spark.catalog.clearCache() // cold caches — the claim is about cold derivation
-        graft.SparkEntry.queries(q)(spark, dir).count()
-        // listener events are async; drain before reading the counter
-        Thread.sleep(1000)
-      } finally spark.sparkContext.removeSparkListener(l)
-      rec.get / nDocs // integer division: partial-table reads surface as a count mismatch
+      spark.catalog.clearCache() // cold caches — the claim is about cold derivation
+      val (_, cap) = Profile.during(spark)(graft.SparkEntry.queries(q)(spark, dir).count())
+      cap.recordsRead / nDocs // integer division: partial-table reads surface as a count mismatch
     }
     assert(corpusPasses("q107_bigram_perplexity") == 2L)
     assert(corpusPasses("q105_tfidf_pairs") == 3L)
@@ -339,35 +329,11 @@ class PlanAuditSpec extends AnyFunSuite {
     // (pre-AQE) round plan may legitimately pencil in an SMJ — the
     // checkpointed frame carries estimated, not exact, stats — and
     // AQE's runtime conversion (guide §3.1) is the mechanism that
-    // must fix it, so only the FINAL plan section is audited.
-    def roundPlans(q: String): Seq[String] = {
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val l = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-          // AdaptiveSparkPlanExec.toString appends the "== Initial
-          // Plan ==" section after the final plan — keep only what
-          // actually executed
-          plans.add(qe.executedPlan.toString.split("== Initial Plan ==").head)
-        override def onFailure(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(l)
-      try {
-        SparkEntry.queries(q)(spark, dir).count()
-        // the listener bus is async: wait for the round executions
-        // (joins) to surface, not just the final RDD-scan count
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (System.nanoTime() < deadline &&
-          !plans.toArray.exists(_.toString.contains("BroadcastHashJoin")))
-          Thread.sleep(100)
-        import scala.jdk.CollectionConverters._
-        plans.asScala.toSeq
-      } finally {
-        spark.listenerManager.unregister(l)
-        spark.catalog.clearCache()
-      }
-    }
+    // must fix it, so only the FINAL plan section (all Profile keeps)
+    // is audited.
+    def roundPlans(q: String): Seq[String] =
+      try Profile.during(spark)(SparkEntry.queries(q)(spark, dir).count())._2.plans
+      finally spark.catalog.clearCache()
     val sssp = roundPlans("q244_sssp")
     assert(sssp.exists(_.contains("BroadcastHashJoin")),
       "SSSP round join should broadcast dist")

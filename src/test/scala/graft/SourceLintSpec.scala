@@ -124,4 +124,20 @@ class SourceLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(hits.isEmpty,
       "oracle floors through DOUBLE (use DuckDB `//`):\n" + hits.mkString("\n"))
   }
+
+  test("only Profile registers a Spark listener") {
+    // one capture, drained on a marker job: a hand-rolled listener
+    // brings back its own sleep and its own idea of when events are in
+    val re = """addSpark[L]istener|listenerManager\.register""".r
+    val hits = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      Files.walk(Paths.get(root)).iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Profile.scala")
+        .flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if re.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+          }
+        }
+    }
+    assert(hits.isEmpty, "listener registered outside graft/Profile.scala:\n" + hits.mkString("\n"))
+  }
 }

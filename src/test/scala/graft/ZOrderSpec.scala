@@ -87,21 +87,10 @@ class ZOrderSpec extends AnyFunSuite {
     df.repartitionByRange(8, col("z")).sortWithinPartitions(col("z"))
       .write.parquet(s"$base/zsorted")
     df.repartition(8).write.parquet(s"$base/roworder")
-    def recordsRead(path: String): Long = {
-      val rec = new java.util.concurrent.atomic.AtomicLong(0L)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null) rec.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        spark.read.parquet(path)
-          .filter(col("x").between(16384, 24575) && col("y").between(32768, 40959))
-          .count()
-        Thread.sleep(1000)
-      } finally spark.sparkContext.removeSparkListener(l)
-      rec.get
-    }
+    def recordsRead(path: String): Long =
+      Profile.during(spark)(spark.read.parquet(path)
+        .filter(col("x").between(16384, 24575) && col("y").between(32768, 40959))
+        .count())._2.recordsRead
     val zRead = recordsRead(s"$base/zsorted")
     val rowRead = recordsRead(s"$base/roworder")
     assert(rowRead >= n * 9L / 10, s"row-order layout should read ~all rows, read $rowRead/$n")
